@@ -112,10 +112,14 @@ object Bench {
     // per-query JSON to BENCH_LAST.json as a sidecar, and (b) print a
     // COMPACT summary line (no per-query map, well under the capture
     // window) as the final stdout line so the driver can parse totals.
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
-      (full + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () } // read-only cwd: the lines still print
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":{},"errors":$errs,"n_ok":${times.size},"n_err":${errors.size},"probe_sec":${f"$probeSec%.3f"},"store_build_sec":${f"$storeSec%.3f"},"runs":$runs,"sf":"$sfDir","full":"BENCH_LAST.json"}""")
+    // read-only cwd: the lines still print, and "full" says no sidecar
+    val sidecar =
+      try {
+        java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
+          (full + "\n").getBytes("UTF-8"))
+        "\"BENCH_LAST.json\""
+      } catch { case scala.util.control.NonFatal(_) => "null" }
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":{},"errors":$errs,"n_ok":${times.size},"n_err":${errors.size},"probe_sec":${f"$probeSec%.3f"},"store_build_sec":${f"$storeSec%.3f"},"runs":$runs,"sf":"$sfDir","full":$sidecar}""")
     spark.stop()
   }
 }

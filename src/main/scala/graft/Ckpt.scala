@@ -113,6 +113,12 @@ object Ckpt {
       case _ => mat(df)
     }
 
+  /** Best-effort cleanup, e.g. `quietly(df.unpersist(blocking = false))`:
+    * a failed release must not fail the query it follows. Only NonFatal
+    * errors are swallowed — OOM and interrupts still propagate. */
+  def quietly(release: => Any): Unit =
+    try { release; () } catch { case scala.util.control.NonFatal(_) => () }
+
   /** Chainable form: `frame.select(...).mat()` replaces
     * `.localCheckpoint()` at every loop site. */
   implicit class MatOps(private val df: DataFrame) extends AnyVal {

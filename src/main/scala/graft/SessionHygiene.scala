@@ -18,9 +18,8 @@ import org.apache.spark.sql.SparkSession
   * correct, just cold. */
 object SessionHygiene {
   def sweep(spark: SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach { r =>
-      try { r.unpersist(blocking = false); () } catch { case _: Throwable => () }
-    }
-    try spark.catalog.clearCache() catch { case _: Throwable => () }
+    spark.sparkContext.getPersistentRDDs.values.foreach(r =>
+      Ckpt.quietly(org.apache.spark.sql.graft.InternalBridge.unpersist(r)))
+    Ckpt.quietly(spark.catalog.clearCache())
   }
 }

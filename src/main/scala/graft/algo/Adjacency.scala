@@ -130,8 +130,7 @@ final class FrameAdjacency(oriented: DataFrame,
   def bySrc(aggs: Seq[Column]): DataFrame =
     e.groupBy(col("src").as("vid")).agg(aggs.head, aggs.tail: _*)
 
-  def release(): Unit =
-    try { e.unpersist(blocking = false); () } catch { case _: Throwable => () }
+  def release(): Unit = graft.Ckpt.quietly(e.unpersist(blocking = false))
 }
 
 /** Bucketed store sides, each hash-partitioned by its own src column
@@ -182,7 +181,6 @@ final class StoredAdjacency(sides: Seq[DataFrame],
       .reduce(_ unionByName _)
       .groupBy("vid").agg(aggs.head, aggs.tail: _*)
 
-  def release(): Unit = if (cacheSides) narrow.foreach { e =>
-    try { e.unpersist(blocking = false); () } catch { case _: Throwable => () }
-  }
+  def release(): Unit = if (cacheSides)
+    narrow.foreach(e => graft.Ckpt.quietly(e.unpersist(blocking = false)))
 }

@@ -3,6 +3,8 @@ package graft.algo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Ckpt.MatOps
+import graft.algo.Superstep.{Stop, old}
+import graft.traverse.Traverse.freeCheckpoint
 
 /** Whole-graph analytics (the capability set of the reference
   * ecosystem's Spark-based nebula-algorithm package — degrees,
@@ -16,7 +18,10 @@ import graft.Ckpt.MatOps
   *
   * Scale: each iteration is one shuffle on dst (message aggregation)
   * + one join on vid (state update), with the state frame
-  * checkpointed per round — same posture as the traversal loops.
+  * checkpointed per round — same posture as the traversal loops. The
+  * round-synchronous loops all run through [[Superstep]]; the walks,
+  * betweenness and multi-level Louvain's level loop keep their own
+  * loops because their state accumulates across steps.
   * PageRank contributions use map-side combine via groupBy.sum.
   */
 object GraphAlgos {
@@ -49,16 +54,14 @@ object GraphAlgos {
     * `iters` as the safety cap — correct on ANY diameter. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
                           iters: Int,
-                          untilConverged: Boolean = false): DataFrame = {
+                          untilConverged: Boolean = false): DataFrame =
     // pre-partitioned on the per-round join key: the cached layout
     // satisfies the join's distribution, so each round shuffles only
     // the (small) label state, never the big edge frame
-    val adj = new FrameAdjacency(
+    withAdj(new FrameAdjacency(
       edges.select(col("src"), col("dst"))
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))))
-    try ccLoop(vertices, adj, iters, untilConverged)
-    finally adj.release()
-  }
+        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))))(
+      connectedComponents(vertices, _, iters, untilConverged))
 
   /** WCC over a pre-built [[Adjacency]] (both directions already
     * encoded) — the GraphStore path: a [[StoredAdjacency]] of the
@@ -68,37 +71,48 @@ object GraphAlgos {
     * bit-identical to the frame path. */
   def connectedComponents(vertices: DataFrame, adj: Adjacency,
                           iters: Int, untilConverged: Boolean): DataFrame =
-    ccLoop(vertices, adj, iters, untilConverged)
-
-  private def ccLoop(vertices: DataFrame, adj: Adjacency,
-                     iters: Int, untilConverged: Boolean): DataFrame = {
-    var labels = vertices.select(col("vid"), col("vid").as("label"))
-      .mat()
-    var round = 0
-    var changed = 1L
     // A fixpoint early-exit in oracle mode was tried and reverted with
     // measurement (round 13): the bench graph's iteration counts are
     // tuned to the diameter, so the exit never fires and the per-round
     // changed-count is pure cost. `untilConverged` keeps paying it
     // because there it IS the loop condition.
-    while (round < iters && (!untilConverged || changed > 0)) {
-      val fromNbrs = adj.send(labels, Seq(col("label")))
-        .groupBy("vid")
-        .agg(min(col("label")).as("nbr_label"))
-      val upd = labels.join(fromNbrs, Seq("vid"), "left_outer")
-        .select(col("vid"), col("label").as("__old"),
-          least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .as("label"))
-        .mat()
-      if (untilConverged)
-        changed = upd.filter(col("label") =!= col("__old")).count()
-      // the new checkpoint holds every row — free the superseded one
-      graft.traverse.Traverse.freeCheckpoint(labels)
-      labels = upd.drop("__old")
-      round += 1
-    }
-    labels
+    Superstep.run(vertices.select(col("vid"), col("vid").as("label")), iters,
+      if (untilConverged) Stop.Unchanged("label") else Stop.Fixed)(
+      minLabel(adj, probed = untilConverged))._1
+
+  /** One synchronous min-label round over `adj` — WCC's update and
+    * SCC's forward coloring: label(v) = least of its own label and
+    * every label `adj` delivers to it. The left join both aggregates
+    * the messages into the state and restricts them to the state's
+    * vertices. `probed` keeps the previous label for the
+    * changed-row probe. */
+  private def minLabel(adj: Adjacency, probed: Boolean)
+                      (labels: DataFrame, round: Int): DataFrame = {
+    val fromNbrs = adj.send(labels, Seq(col("label")))
+      .groupBy("vid")
+      .agg(min(col("label")).as("nbr_label"))
+    labels.join(fromNbrs, Seq("vid"), "left_outer")
+      .select((col("vid") +: old("label", probed)) :+
+        least(col("label"), coalesce(col("nbr_label"), col("label")))
+          .as("label"): _*)
   }
+
+  /** Run `body` over an adjacency built for this call and release its
+    * cache afterwards — the frame overloads' posture. */
+  private def withAdj[A](adj: Adjacency)(body: Adjacency => A): A =
+    try body(adj) finally adj.release()
+
+  /** `acc ∪ rows` as one new checkpoint, freeing the `acc` it
+    * supersedes — the accumulators that outgrow a Superstep state
+    * (SCC assignments, betweenness levels). A null `acc` starts the
+    * accumulation with `rows` itself. */
+  private def appendMat(acc: DataFrame, rows: DataFrame): DataFrame =
+    if (acc == null) rows
+    else {
+      val u = acc.unionByName(rows).mat()
+      freeCheckpoint(acc)
+      u
+    }
 
   /** PageRank, `iters` synchronous rounds, damping 0.85:
     * pr' = (1-d) + d·Σ_in pr/out_deg  (unnormalized Brin-Page form;
@@ -108,14 +122,12 @@ object GraphAlgos {
     * rank change in a round falls below `tol` (`iters` stays the
     * safety cap); `tol = 0` replays exactly `iters` rounds. */
   def pageRank(vertices: DataFrame, edges: DataFrame, iters: Int,
-               damping: Double = 0.85, tol: Double = 0.0): DataFrame = {
+               damping: Double = 0.85, tol: Double = 0.0): DataFrame =
     // pre-partitioned by src (see connectedComponents): per-round joins
     // against the rank state reuse the cached layout instead of
     // re-shuffling the edge frame
-    val adj = new FrameAdjacency(edges.select("src", "dst"))
-    try prLoop(vertices, adj, iters, damping, tol)
-    finally adj.release()
-  }
+    withAdj(new FrameAdjacency(edges.select("src", "dst")))(
+      pageRank(vertices, _, iters, damping, tol))
 
   /** PageRank over a pre-built directed [[Adjacency]] — the GraphStore
     * path: a [[StoredAdjacency]] of the bucketed out table keeps every
@@ -124,32 +136,19 @@ object GraphAlgos {
     * round) instead of into the edge frame; the contribution multiset
     * is identical. */
   def pageRank(vertices: DataFrame, adj: Adjacency, iters: Int,
-               damping: Double, tol: Double): DataFrame =
-    prLoop(vertices, adj, iters, damping, tol)
-
-  private def prLoop(vertices: DataFrame, adj: Adjacency, iters: Int,
-                     damping: Double, tol: Double): DataFrame = {
+               damping: Double, tol: Double): DataFrame = {
     val outDeg = adj.outDegrees.mat()
-    var pr = vertices.select(col("vid"), lit(1.0).as("pr")).mat()
-    var round = 0
-    var delta = Double.MaxValue
-    while (round < iters && (tol <= 0.0 || delta > tol)) {
+    Superstep.run(vertices.select(col("vid"), lit(1.0).as("pr")), iters,
+        if (tol > 0.0) Stop.Delta("pr", tol) else Stop.Fixed) { (pr, _) =>
       // inner join: dangling vertices (no out-edges) contribute nothing
       val withOd = pr.join(outDeg, Seq("vid"))
       val contrib = adj.send(withOd, Seq((col("pr") / col("od")).as("c")))
         .groupBy("vid").agg(sum(col("c")).as("inflow"))
-      val upd = pr.join(contrib, Seq("vid"), "left_outer")
-        .select(col("vid"), col("pr").as("__old"),
+      pr.join(contrib, Seq("vid"), "left_outer")
+        .select((col("vid") +: old("pr", tol > 0.0)) :+
           (lit(1.0 - damping) +
-            lit(damping) * coalesce(col("inflow"), lit(0.0))).as("pr"))
-        .mat()
-      if (tol > 0.0)
-        delta = upd.agg(max(abs(col("pr") - col("__old")))).head.getDouble(0)
-      graft.traverse.Traverse.freeCheckpoint(pr) // superseded by upd
-      pr = upd.drop("__old")
-      round += 1
-    }
-    pr
+            lit(damping) * coalesce(col("inflow"), lit(0.0))).as("pr"): _*)
+    }._1
   }
 
   /** Per-vertex triangle count over an undirected simple-graph view of
@@ -173,10 +172,7 @@ object GraphAlgos {
     * second time. */
   private def triangleCore(und: DataFrame,
                            degOpt: Option[DataFrame]): DataFrame = {
-    val deg = degOpt.getOrElse(
-      und.select(col("a").as("vid"))
-        .unionAll(und.select(col("b").as("vid")))
-        .groupBy("vid").agg(count(lit(1)).as("deg")))
+    val deg = degOpt.getOrElse(undDegrees(und))
     // orient a→b when (deg,vid)(a) < (deg,vid)(b); broadcast-size deg
     // frames only when Spark decides to — plain equi-joins here
     val withDeg = und
@@ -203,9 +199,7 @@ object GraphAlgos {
   def clusteringCoefficients(edges: DataFrame): DataFrame = {
     val und = canonicalUndirected(edges)
       .mat() // scanned twice (degrees + triangle join tree)
-    val deg = und.select(col("a").as("vid"))
-      .unionAll(und.select(col("b").as("vid")))
-      .groupBy("vid").agg(count(lit(1)).as("deg"))
+    val deg = undDegrees(und)
       .mat() // joined on both orientation sides + the final cc join
     // triangleCore reuses BOTH frames: no re-canonicalization (the
     // historical inner distinct), no second degree aggregation
@@ -225,6 +219,22 @@ object GraphAlgos {
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b")).distinct()
 
+  /** Both endpoints of every canonical (a, b) edge, one `vid` row each. */
+  private def endpoints(und: DataFrame): DataFrame =
+    und.select(col("a").as("vid")).unionAll(und.select(col("b").as("vid")))
+
+  /** Degree per vertex over a canonical edge set: (vid, deg). */
+  private def undDegrees(und: DataFrame): DataFrame =
+    endpoints(und).groupBy("vid").agg(count(lit(1)).as("deg"))
+
+  /** A canonical (a, b) edge set oriented both ways as (src, dst,
+    * keep...) — the undirected algorithms' adjacency input. */
+  private def bothWays(und: DataFrame, keep: String*): DataFrame = {
+    def side(s: String, d: String) =
+      und.select((col(s).as("src") +: col(d).as("dst") +: keep.map(col)): _*)
+    side("a", "b").unionAll(side("b", "a"))
+  }
+
   /** K-core by synchronous peeling, `iters` fixed rounds: each round
     * recomputes degrees over the surviving edge set and drops vertices
     * with degree < k together with their edges (converged once a round
@@ -233,35 +243,21 @@ object GraphAlgos {
     * semi-joins on the edge keys, state checkpointed so plan depth
     * stays constant — the same loop shape as WCC. */
   def kCore(edges: DataFrame, k: Int, iters: Int): DataFrame = {
-    var und = canonicalUndirected(edges).mat()
     // peeling is monotone (each round's edge set ⊆ the previous), so a
     // round that drops nothing is the fixpoint and every later round
     // is an identity pass — skip them. The convergence signal is one
     // count() per round against the ALREADY-materialized checkpoint
     // (~free) vs three shuffles of the edge set per skipped round.
     // Result-identical to running all `iters` rounds.
-    var cnt = und.count()
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
-      val deg = und.select(col("a").as("vid"))
-        .unionAll(und.select(col("b").as("vid")))
-        .groupBy("vid").agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select("vid")
-      val upd = und
+    val (core, _) = Superstep.run(canonicalUndirected(edges), iters,
+        Stop.SameRows) { (und, _) =>
+      val keep = undDegrees(und).filter(col("deg") >= k).select("vid")
+      und
         .join(keep.withColumnRenamed("vid", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("vid", "b"), Seq("b"), "left_semi")
         .select("a", "b")
-        .mat()
-      val c2 = upd.count()
-      converged = c2 == cnt
-      cnt = c2
-      graft.traverse.Traverse.freeCheckpoint(und)
-      und = upd
-      round += 1
     }
-    und.select(col("a").as("vid")).unionAll(und.select(col("b").as("vid")))
-      .distinct()
+    endpoints(core).distinct()
   }
 
   /** Synchronous label propagation, `iters` fixed rounds over the
@@ -272,14 +268,9 @@ object GraphAlgos {
     * one argmin aggregation per round (no per-vertex windows: min_by
     * over a (−count, label) key keeps the partial-aggregation path). */
   def labelPropagation(vertices: DataFrame, edges: DataFrame,
-                       iters: Int): DataFrame = {
-    val und = canonicalUndirected(edges)
-    val adj = new FrameAdjacency(
-      und.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(und.select(col("b").as("src"), col("a").as("dst"))))
-    try lpaLoop(vertices, adj, iters)
-    finally adj.release()
-  }
+                       iters: Int): DataFrame =
+    withAdj(new FrameAdjacency(bothWays(canonicalUndirected(edges))))(
+      labelPropagation(vertices, _, iters))
 
   /** LPA over a pre-built simple-undirected [[Adjacency]] — the
     * GraphStore path: a [[StoredAdjacency]] of the bucketed `_und`
@@ -289,29 +280,17 @@ object GraphAlgos {
     * bit-identical to the frame path. */
   def labelPropagation(vertices: DataFrame, adj: Adjacency,
                        iters: Int): DataFrame =
-    lpaLoop(vertices, adj, iters)
-
-  private def lpaLoop(vertices: DataFrame, adj: Adjacency,
-                      iters: Int): DataFrame = {
-    var labels = vertices.select(col("vid"), col("vid").as("label"))
-      .mat()
-    var round = 0
-    while (round < iters) {
+    Superstep.run(vertices.select(col("vid"), col("vid").as("label")),
+        iters) { (labels, _) =>
       val counted = adj.send(labels, Seq(col("label")))
         .groupBy("vid", "label")
         .agg(count(lit(1)).as("cnt"))
       val pick = counted.groupBy("vid")
         .agg(min_by(col("label"),
           struct((-col("cnt")).as("nc"), col("label").as("l"))).as("nlabel"))
-      val upd = labels.join(pick, Seq("vid"), "left_outer")
+      labels.join(pick, Seq("vid"), "left_outer")
         .select(col("vid"), coalesce(col("nlabel"), col("label")).as("label"))
-        .mat()
-      graft.traverse.Traverse.freeCheckpoint(labels)
-      labels = upd
-      round += 1
-    }
-    labels
-  }
+    }._1
 
   /** Strongly connected components — the FW-BW coloring scheme
     * (Orzan's coloring / the same family as GraphX's SCC), run as
@@ -333,20 +312,8 @@ object GraphAlgos {
     * on known graphs. Each round is one join + one min-aggregation on
     * the remaining set — the BFS shuffle shape, frames checkpointed. */
   def sccPinned(vertices: DataFrame, edges: DataFrame,
-                phases: Int, rounds: Int): DataFrame = {
-    // checkpoint the dedup ONCE: both direction views read the same
-    // materialized frame instead of re-running the distinct shuffle
-    // per adjacency persist
-    val e = edges.select("src", "dst").distinct().mat()
-    val adjOut = new FrameAdjacency(e)
-    val adjIn = new FrameAdjacency(
-      e.select(col("dst").as("src"), col("src").as("dst")))
-    try sccPinnedLoop(vertices, adjOut, adjIn, phases, rounds)
-    finally {
-      adjOut.release(); adjIn.release()
-      graft.traverse.Traverse.freeCheckpoint(e)
-    }
-  }
+                phases: Int, rounds: Int): DataFrame =
+    sccFrames(edges)(sccPinned(vertices, _, _, phases, rounds))
 
   /** sccPinned over pre-built forward/backward [[Adjacency]] views (the
     * GraphStore path: distinct bucketed out table + its reversed in
@@ -359,163 +326,82 @@ object GraphAlgos {
     * edge copies. */
   def sccPinned(vertices: DataFrame, adjOut: Adjacency, adjIn: Adjacency,
                 phases: Int, rounds: Int): DataFrame =
-    sccPinnedLoop(vertices, adjOut, adjIn, phases, rounds)
+    scc(vertices, adjOut, adjIn, phases, rounds, exact = false)
 
-  private def sccPinnedLoop(vertices: DataFrame, adjOut: Adjacency,
-                            adjIn: Adjacency, phases: Int,
-                            rounds: Int): DataFrame = {
+  /** Exact SCC: the same scheme with both loops run to fixpoint and
+    * phases repeated until every vertex is assigned. */
+  def sccUntilConverged(vertices: DataFrame, edges: DataFrame,
+                        maxRounds: Int = 64): DataFrame =
+    sccFrames(edges)(scc(vertices, _, _, Int.MaxValue, maxRounds,
+      exact = true))
+
+  /** SCC's frame path: checkpoint the dedup ONCE, so both direction
+    * views read the same materialized frame instead of re-running the
+    * distinct shuffle per adjacency persist. */
+  private def sccFrames(edges: DataFrame)
+                       (body: (Adjacency, Adjacency) => DataFrame): DataFrame = {
+    val e = edges.select("src", "dst").distinct().mat()
+    try withAdj(new FrameAdjacency(e))(adjOut =>
+      withAdj(new FrameAdjacency(
+        e.select(col("dst").as("src"), col("src").as("dst"))))(body(adjOut, _)))
+    finally freeCheckpoint(e)
+  }
+
+  /** The FW-BW phase loop of both SCC forms. Pinned (`exact = false`):
+    * `rounds` fixed rounds per loop, at most `phases` phases. Exact:
+    * each loop runs to its fixpoint, with `rounds` as a cap that fails
+    * loudly. Either way the phases stop once every vertex is assigned. */
+  private def scc(vertices: DataFrame, adjOut: Adjacency, adjIn: Adjacency,
+                  phases: Int, rounds: Int, exact: Boolean): DataFrame = {
     var rem = vertices.select("vid").distinct().mat()
-    var remCnt = rem.count()
     var acc: DataFrame = null
     var p = 0
     // an exhausted remainder makes every later phase a no-op over
-    // empty frames — skip it (2 phases × 2 loops × `rounds` Spark
-    // jobs each otherwise run against nothing). Result-identical: a
-    // phase over ∅ assigns ∅.
-    while (p < phases && remCnt > 0) {
-      // forward min-color over the remaining set. (Per-round
-      // changed-count fixpoint exits were tried and reverted with
-      // measurement, round 13: the pinned rounds rarely converge early
-      // on the bench graph and 24 extra count actions cost ~1.5 s.)
-      var color = rem.select(col("vid"), col("vid").as("color")).mat()
-      var r = 0
-      while (r < rounds) {
-        // WCC's update shape: the left join both aggregates the
-        // messages into the existing state AND restricts them to the
-        // remaining set (color holds exactly rem) — no extra semi-join
-        val fromNbrs = adjOut.send(color, Seq(col("color")))
-          .groupBy("vid").agg(min(col("color")).as("__nc"))
-        val upd = color.join(fromNbrs, Seq("vid"), "left_outer")
-          .select(col("vid"),
-            least(col("color"), coalesce(col("__nc"), col("color")))
-              .as("color"))
-          .mat()
-        graft.traverse.Traverse.freeCheckpoint(color)
-        color = upd
-        r += 1
-      }
+    // empty frames — skip it (2 loops × `rounds` Spark jobs each
+    // otherwise run against nothing). Result-identical: a phase over ∅
+    // assigns ∅. (Per-round changed-count exits in the pinned form
+    // were tried and reverted with measurement, round 13: the pinned
+    // rounds rarely converge early on the bench graph and 24 extra
+    // count actions cost ~1.5 s.)
+    while (p < phases && rem.count() > 0) {
+      // forward min-color over the remaining set (minLabel's left join
+      // keeps it there — color holds exactly rem)
+      val (color, colored) = Superstep.run(
+        rem.select(col("vid"), col("vid").as("label")), rounds,
+        if (exact) Stop.Unchanged("label") else Stop.Fixed)(
+        minLabel(adjOut, probed = exact))
+      // silent truncation here would SHATTER a >maxRounds-diameter SCC
+      // into wrong components — exactness demands a loud failure
+      require(!exact || colored,
+        s"scc coloring did not converge within $rounds rounds — raise maxRounds")
       // backward reach from roots, within color (the inner join on the
       // rem-only color frame keeps the walk inside the remaining set)
-      var reach = color.filter(col("vid") === col("color"))
-        .select(col("vid"), col("vid").as("root")).mat()
-      r = 0
-      while (r < rounds) {
+      val (reach, reached) = Superstep.run(
+          color.filter(col("vid") === col("label"))
+            .select(col("vid"), col("vid").as("root")), rounds,
+          if (exact) Stop.SameRows else Stop.Fixed) { (reach, _) =>
         val step = adjIn.send(reach, Seq(col("root")))
-          .join(color.select(col("vid"), col("color").as("c2")), Seq("vid"))
+          .join(color.select(col("vid"), col("label").as("c2")), Seq("vid"))
           .filter(col("c2") === col("root"))
           .select(col("vid"), col("root"))
-        val upd = reach.unionByName(step).distinct().mat()
-        graft.traverse.Traverse.freeCheckpoint(reach)
-        reach = upd
-        r += 1
+        reach.unionByName(step).distinct()
       }
+      require(!exact || reached,
+        s"scc backward reach did not converge within $rounds rounds — raise maxRounds")
       val assigned = reach.select(col("vid"), col("root").as("scc_id")).mat()
-      graft.traverse.Traverse.freeCheckpoint(reach)
-      acc = if (acc == null) assigned
-            else {
-              val u = acc.unionByName(assigned).mat()
-              graft.traverse.Traverse.freeCheckpoint(acc)
-              u
-            }
+      acc = appendMat(acc, assigned)
       val rem2 = rem.join(assigned.select("vid"), Seq("vid"), "left_anti").mat()
-      graft.traverse.Traverse.freeCheckpoint(rem)
-      graft.traverse.Traverse.freeCheckpoint(color)
+      Seq(rem, reach, color).foreach(freeCheckpoint)
       // acc's union checkpoint copied assigned's rows (unless aliased on
-      // the first phase) — mirror sccUntilConverged's release
-      if (assigned ne acc) graft.traverse.Traverse.freeCheckpoint(assigned)
+      // the first phase)
+      if (assigned ne acc) freeCheckpoint(assigned)
       rem = rem2
-      remCnt = rem.count()
       p += 1
     }
     val singletons = rem.select(col("vid"), col("vid").as("scc_id"))
     // acc is null only when the input vertex set was empty (the phase
     // loop never ran) — the result is the empty singleton frame
     if (acc == null) singletons else acc.unionByName(singletons)
-  }
-
-  /** Exact SCC: the same scheme with both loops run to fixpoint and
-    * phases repeated until every vertex is assigned. */
-  def sccUntilConverged(vertices: DataFrame, edges: DataFrame,
-                        maxRounds: Int = 64): DataFrame = {
-    val e = edges.select("src", "dst").distinct().mat() // see sccPinned
-    val adjOut = new FrameAdjacency(e)
-    val adjIn = new FrameAdjacency(
-      e.select(col("dst").as("src"), col("src").as("dst")))
-    try sccConvergedLoop(vertices, adjOut, adjIn, maxRounds)
-    finally {
-      adjOut.release(); adjIn.release()
-      graft.traverse.Traverse.freeCheckpoint(e)
-    }
-  }
-
-  private def sccConvergedLoop(vertices: DataFrame, adjOut: Adjacency,
-                               adjIn: Adjacency,
-                               maxRounds: Int): DataFrame = {
-    var rem = vertices.select("vid").distinct().mat()
-    var remCnt = rem.count()
-    var acc: DataFrame = null
-    while (remCnt > 0) {
-      var color = rem.select(col("vid"), col("vid").as("color")).mat()
-      var changed = 1L
-      var guard = 0
-      while (changed > 0 && guard < maxRounds) {
-        // WCC's update shape — the left join aggregates AND restricts
-        // to the remaining set in one pass (see sccPinnedLoop)
-        val fromNbrs = adjOut.send(color, Seq(col("color")))
-          .groupBy("vid").agg(min(col("color")).as("__nc"))
-        val upd = color.join(fromNbrs, Seq("vid"), "left_outer")
-          .select(col("vid"), col("color").as("__old"),
-            least(col("color"), coalesce(col("__nc"), col("color")))
-              .as("color"))
-          .mat()
-        changed = upd.filter(col("color") =!= col("__old")).count()
-        graft.traverse.Traverse.freeCheckpoint(color)
-        color = upd.drop("__old")
-        guard += 1
-      }
-      // silent truncation here would SHATTER a >maxRounds-diameter SCC
-      // into wrong components — exactness demands a loud failure
-      require(changed == 0,
-        s"scc coloring did not converge within $maxRounds rounds — raise maxRounds")
-      var reach = color.filter(col("vid") === col("color"))
-        .select(col("vid"), col("vid").as("root")).mat()
-      var grew = 1L
-      var cnt = reach.count()
-      guard = 0
-      while (grew > 0 && guard < maxRounds) {
-        val step = adjIn.send(reach, Seq(col("root")))
-          .join(color.select(col("vid"), col("color").as("c2")), Seq("vid"))
-          .filter(col("c2") === col("root"))
-          .select(col("vid"), col("root"))
-        val upd = reach.unionByName(step).distinct().mat()
-        val c2 = upd.count()
-        grew = c2 - cnt; cnt = c2
-        graft.traverse.Traverse.freeCheckpoint(reach)
-        reach = upd
-        guard += 1
-      }
-      require(grew == 0,
-        s"scc backward reach did not converge within $maxRounds rounds — raise maxRounds")
-      val assigned = reach.select(col("vid"), col("root").as("scc_id")).mat()
-      acc = if (acc == null) assigned
-            else {
-              val u = acc.unionByName(assigned).mat()
-              graft.traverse.Traverse.freeCheckpoint(acc)
-              u
-            }
-      val rem2 = rem.join(assigned.select("vid"), Seq("vid"), "left_anti").mat()
-      graft.traverse.Traverse.freeCheckpoint(rem)
-      graft.traverse.Traverse.freeCheckpoint(reach)
-      graft.traverse.Traverse.freeCheckpoint(color)
-      if (assigned ne acc) graft.traverse.Traverse.freeCheckpoint(assigned)
-      rem = rem2
-      remCnt = rem.count()
-    }
-    // adjacency lifecycle belongs to the OWNING wrapper (matching
-    // sccPinnedLoop): sccUntilConverged's finally releases both views;
-    // releasing here too would drop caches on caller-owned adjacencies
-    // if an Adjacency-taking overload is ever added
-    acc
   }
 
   /** HANP — Hop Attenuation & Node Preference label propagation
@@ -531,14 +417,9 @@ object GraphAlgos {
     * argmax bit-for-bit. Same per-round shuffle shape as LPA (one
     * message aggregation + one state join), state checkpointed. */
   def hanp(vertices: DataFrame, edges: DataFrame, iters: Int,
-           delta: Double = 0.0625): DataFrame = {
-    val und = canonicalUndirected(edges)
-    val adj = new FrameAdjacency(
-      und.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(und.select(col("b").as("src"), col("a").as("dst"))))
-    try hanpLoop(vertices, adj, iters, delta)
-    finally adj.release()
-  }
+           delta: Double = 0.0625): DataFrame =
+    withAdj(new FrameAdjacency(bothWays(canonicalUndirected(edges))))(
+      hanp(vertices, _, iters, delta))
 
   /** HANP over a pre-built simple-undirected [[Adjacency]] (the
     * GraphStore `_und` path — see labelPropagation). The sender degree
@@ -547,16 +428,10 @@ object GraphAlgos {
     * scored-vote multiset is identical, and every sum is dyadic-exact,
     * so results are bit-identical to the frame path. */
   def hanp(vertices: DataFrame, adj: Adjacency, iters: Int,
-           delta: Double): DataFrame =
-    hanpLoop(vertices, adj, iters, delta)
-
-  private def hanpLoop(vertices: DataFrame, adj: Adjacency, iters: Int,
-                       delta: Double): DataFrame = {
+           delta: Double): DataFrame = {
     val deg = adj.outDegrees.mat() // (vid, od) — static across rounds
-    var state = vertices.select(col("vid"), col("vid").as("label"),
-      lit(1.0).as("score")).mat()
-    var round = 0
-    while (round < iters) {
+    val (state, _) = Superstep.run(vertices.select(col("vid"),
+        col("vid").as("label"), lit(1.0).as("score")), iters) { (state, _) =>
       // inner join: a vertex with no edges sends no messages anyway
       val withDeg = state.join(deg, Seq("vid"))
       val msgs = adj.send(withDeg, Seq(col("label"),
@@ -573,16 +448,12 @@ object GraphAlgos {
           struct((-col("f")).as("nf"), col("label").as("l"))).as("__w"))
         .select(col("vid"), col("__w.label").as("nlabel"),
           greatest(col("__w.smax") - delta, lit(0.0)).as("nscore"))
-      val upd = state.join(pick, Seq("vid"), "left_outer")
+      state.join(pick, Seq("vid"), "left_outer")
         .select(col("vid"),
           coalesce(col("nlabel"), col("label")).as("label"),
           coalesce(col("nscore"), col("score")).as("score"))
-        .mat()
-      graft.traverse.Traverse.freeCheckpoint(state)
-      state = upd
-      round += 1
     }
-    graft.traverse.Traverse.freeCheckpoint(deg)
+    freeCheckpoint(deg)
     state
   }
 
@@ -615,7 +486,7 @@ object GraphAlgos {
     // capped is fully superseded once enriched is materialized (deg was
     // computed during that materialization; nothing reads capped again)
     // — free its blocks now instead of holding them for the session
-    graft.traverse.Traverse.freeCheckpoint(capped)
+    freeCheckpoint(capped)
     val common = enriched.as("x").join(enriched.as("y"),
         col("x.dst") === col("y.dst") && col("x.src") < col("y.src"))
       .groupBy(col("x.src").as("a"), col("y.src").as("b"))
@@ -687,12 +558,10 @@ object GraphAlgos {
     val selfSum = selfW.map(_.agg(coalesce(sum("sw"), lit(0L)))
       .head.getLong(0)).getOrElse(0L)
     val m2 = (wSum + selfSum) * 2
-    val both = undM.select(col("a").as("src"), col("b").as("dst"), col("w"))
-      .unionAll(undM.select(col("b").as("src"), col("a").as("dst"), col("w")))
-      .repartition(col("src")) // see connectedComponents
-      .sortWithinPartitions("src") // elide the per-round join Sort
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nbrDeg = both.groupBy(col("src").as("vid")).agg(sum("w").as("k0"))
+    // the cached both-ways view, partitioned and sorted on src so the
+    // per-round message join never exchanges or sorts the edge side
+    val adj = new FrameAdjacency(bothWays(undM, "w"), keep = Seq("w"))
+    val nbrDeg = adj.bySrc(Seq(sum("w").as("k0")))
     val deg = (selfW match {
       case None => nbrDeg.select(col("vid"), col("k0").as("k"))
       case Some(sw) =>
@@ -703,18 +572,17 @@ object GraphAlgos {
           .select(col("vid"), (coalesce(col("k0"), lit(0L)) +
             lit(2L) * coalesce(col("sw"), lit(0L))).as("k"))
     }).mat()
-    var assign = deg.select(col("vid"), col("vid").as("c")).mat()
 
     // candidate scores WITH the staying score folded in — one pass
     // over the message join per round instead of two (the historical
     // split cand/stay formulation re-ran the whole kin subtree — edge
     // join + aggregation — a second time for `stay`; guide §1.2: fix
     // the distributed algorithm first). Exact equivalences used:
-    //  - `both` is orientation-symmetric (und ∪ reversed), so joining
-    //    the assignment on SRC and delivering to DST yields the same
-    //    (receiver, community, w) multiset as the historical dst-join
-    //    — and src is the cached frame's partition key, so the edge
-    //    side never exchanges or sorts per round;
+    //  - the adjacency is orientation-symmetric (und ∪ reversed), so
+    //    joining the assignment on SRC and delivering to DST yields the
+    //    same (receiver, community, w) multiset as the historical
+    //    dst-join — and src is the cached frame's partition key, so
+    //    the edge side never exchanges or sorts per round;
     //  - the own-community candidate row's score is EXACTLY the old
     //    staying score m2·kin_i − k·(st_i − k); when no such row
     //    exists, kin_i = 0 and stay = −k·(st_i − k), a per-vid
@@ -722,8 +590,7 @@ object GraphAlgos {
     //    replaces the second kin pass. All-long arithmetic throughout,
     //    so every comparison is bit-identical to the split form.
     def scoredCand(assign: DataFrame): DataFrame = {
-      val nbrC = both.join(assign, both("src") === assign("vid"))
-        .select(both("dst").as("vid"), col("c"), col("w"))
+      val nbrC = adj.send(assign, Seq(col("c"), col("w")))
       val kin = nbrC.groupBy("vid", "c").agg(sum("w").as("kin"))
       // community size and Σtot in ONE aggregation pass (they key on
       // the same c over the same assign⋈deg rows — deg covers every
@@ -753,8 +620,8 @@ object GraphAlgos {
           col("stay0")))
     }
 
-    var round = 0
-    while (round < iters) {
+    val (assign, _) = Superstep.run(
+        deg.select(col("vid"), col("vid").as("c")), iters) { (assign, round) =>
       val scored = scoredCand(assign)
       // hill-climb: move only on strictly positive gain over staying
       val pick = scored
@@ -766,15 +633,11 @@ object GraphAlgos {
       val gate = pmod(conv(substring(
         md5(concat(col("vid"), lit(s"$gateTag|$round"))), 1, 15), 16, 10)
         .cast("long"), lit(2L)) === 0L
-      val upd = assign
+      assign
         .join(pick, Seq("vid"), "left_outer")
         .select(col("vid"),
           when(gate && col("nc").isNotNull, col("nc"))
             .otherwise(col("c")).as("c"))
-        .mat()
-      graft.traverse.Traverse.freeCheckpoint(assign)
-      assign = upd
-      round += 1
     }
     // improving-move probe over the FINAL assignment (auto-depth mode
     // only): exact — a strictly-positive-gain candidate counts whether
@@ -784,11 +647,11 @@ object GraphAlgos {
         .filter(col("c") =!= col("c_i") && col("score") > col("stay"))
         .isEmpty
     }
-    try { both.unpersist(blocking = false) } catch { case _: Throwable => () }
+    adj.release()
     // undM passed in pre-materialized belongs to the caller (the
     // multi-level driver still contracts over it)
-    if (undM ne und) graft.traverse.Traverse.freeCheckpoint(undM)
-    graft.traverse.Traverse.freeCheckpoint(deg)
+    if (undM ne und) freeCheckpoint(undM)
+    freeCheckpoint(deg)
     (assign, improving)
   }
 
@@ -833,6 +696,8 @@ object GraphAlgos {
     var selfW: Option[DataFrame] = None
     var mapping: DataFrame = null // original vid -> current community
     var lastA: DataFrame = null
+    // the level graph's checkpoints: edge frame and self-weights
+    def releaseLevel(): Unit = (cur +: selfW.toSeq).foreach(freeCheckpoint)
     var done = false
     var l = 1
     while (l <= levels && !done) {
@@ -865,14 +730,13 @@ object GraphAlgos {
             .join(a.select(col("vid").as("__mid2"), col("c")),
               col("__mid") === col("__mid2"))
             .select(col("vid"), col("c")).mat()
-          graft.traverse.Traverse.freeCheckpoint(mapping)
+          freeCheckpoint(mapping)
           m2
         }
       if (l < levels && !done) {
-        val curM = graft.Ckpt.matIdempotent(cur)
         val am = a.select(col("vid").as("__av"), col("c").as("__ac"))
         val bm = a.select(col("vid").as("__bv"), col("c").as("__bc"))
-        val mapped = curM
+        val mapped = cur
           .join(am, col("a") === col("__av"))
           .join(bm, col("b") === col("__bv"))
         val superUnd = mapped.filter(col("__ac") =!= col("__bc"))
@@ -890,19 +754,17 @@ object GraphAlgos {
           .select(col("c").as("vid"), col("sw")))
         val allSelf = rolledPrior.map(intra.unionByName(_)).getOrElse(intra)
           .groupBy("vid").agg(sum("sw").as("sw")).mat()
-        selfW.foreach(graft.traverse.Traverse.freeCheckpoint)
-        graft.traverse.Traverse.freeCheckpoint(curM)
+        releaseLevel()
         selfW = Some(allSelf)
         cur = superUnd
-        if (prevMapping != null) graft.traverse.Traverse.freeCheckpoint(a)
+        if (prevMapping != null) freeCheckpoint(a)
       }
       l += 1
     }
     // release the LAST level's frames: the unfolded mapping is a
     // self-contained checkpoint (lastA aliases mapping when levels==1)
-    if (lastA ne mapping) graft.traverse.Traverse.freeCheckpoint(lastA)
-    graft.traverse.Traverse.freeCheckpoint(cur) // no-op when still lazy
-    selfW.foreach(graft.traverse.Traverse.freeCheckpoint)
+    if (lastA ne mapping) freeCheckpoint(lastA)
+    releaseLevel()
     mapping
   }
 
@@ -934,8 +796,7 @@ object GraphAlgos {
           (col("st") / (2 * m)) * (col("st") / (2 * m))).as("q"))
         .agg(sum("q")).head.getDouble(0)
     } finally {
-      try { mapped.unpersist(blocking = false); () }
-      catch { case _: Throwable => () }
+      graft.Ckpt.quietly(mapped.unpersist(blocking = false))
     }
   }
 
@@ -1009,9 +870,9 @@ object GraphAlgos {
     // every per-step cur was checkpointed EAGERLY, so neither the
     // adjacency nor the degree frame is in any live lineage — release
     // the stored-path persist and the degree checkpoint
-    graft.traverse.Traverse.freeCheckpoint(od)
+    freeCheckpoint(od)
     if (stored)
-      try { adj.unpersist(blocking = false) } catch { case _: Throwable => () }
+      graft.Ckpt.quietly(adj.unpersist(blocking = false))
     out
   }
 
@@ -1053,11 +914,9 @@ object GraphAlgos {
     * the backward pass consumes them. Returns (vid, bc), rows only for
     * vertices on at least one counted path. */
   def betweenness(seeds: DataFrame, edges: DataFrame,
-                  maxSteps: Int): DataFrame = {
-    val adj = new FrameAdjacency(edges.select("src", "dst").distinct())
-    try bcLoop(seeds, adj, maxSteps)
-    finally adj.release()
-  }
+                  maxSteps: Int): DataFrame =
+    withAdj(new FrameAdjacency(edges.select("src", "dst").distinct()))(
+      betweenness(seeds, _, maxSteps))
 
   /** Betweenness over a pre-built DISTINCT directed [[Adjacency]] (the
     * GraphStore path: the simple-view dedup is an exchange-free local
@@ -1066,11 +925,7 @@ object GraphAlgos {
     * multiset-determined per (origin, vid), so results match the frame
     * path. */
   def betweenness(seeds: DataFrame, adj: Adjacency,
-                  maxSteps: Int): DataFrame =
-    bcLoop(seeds, adj, maxSteps)
-
-  private def bcLoop(seeds: DataFrame, adj: Adjacency,
-                     maxSteps: Int): DataFrame = {
+                  maxSteps: Int): DataFrame = {
     // ---- forward: BFS levels with path counts ----
     // Per-level row counts ride along (the loop counts every frontier
     // anyway), so the growing per-level joins below can gate a
@@ -1099,26 +954,18 @@ object GraphAlgos {
       if (frontierRows > 0) {
         levels :+= nxt
         levelRows :+= frontierRows
-        val v2 = visited.unionByName(nxt.select("origin", "vid")).mat()
-        graft.traverse.Traverse.freeCheckpoint(visited)
-        visited = v2
+        visited = appendMat(visited, nxt.select("origin", "vid"))
         visitedRows += frontierRows
-      } else graft.traverse.Traverse.freeCheckpoint(nxt) // terminating empty frontier
+      } else freeCheckpoint(nxt) // terminating empty frontier
       step += 1
     }
-    graft.traverse.Traverse.freeCheckpoint(visited)
+    freeCheckpoint(visited)
     // ---- backward: dependency accumulation, deepest level first ----
     // every computed level 1..deepest contributes rows (the deepest
     // with δ = 0 — endpoints carry no dependency), so the output lists
     // every non-seed vertex on a counted path
     var acc: DataFrame = null
-    def accAdd(dl: DataFrame): Unit =
-      acc = if (acc == null) dl
-            else {
-              val u = acc.unionByName(dl).mat()
-              graft.traverse.Traverse.freeCheckpoint(acc)
-              u
-            }
+    def accAdd(dl: DataFrame): Unit = acc = appendMat(acc, dl)
     var deltaAbove = levels.last.withColumn("delta", lit(0.0))
       .select(col("origin"), col("vid"), col("sigma"), col("delta")).mat()
     if (levels.size >= 2) accAdd(deltaAbove)
@@ -1154,14 +1001,14 @@ object GraphAlgos {
       // answers from, and must not re-free the one accAdd just
       // released (on the first backward round deltaAbove == old acc)
       if ((deltaAbove ne acc) && (deltaAbove ne accBefore))
-        graft.traverse.Traverse.freeCheckpoint(deltaAbove)
-      graft.traverse.Traverse.freeCheckpoint(levels(l)) // consumed
+        freeCheckpoint(deltaAbove)
+      freeCheckpoint(levels(l)) // consumed
       deltaAbove = dl
       l -= 1
     }
-    if (deltaAbove ne acc) graft.traverse.Traverse.freeCheckpoint(deltaAbove)
-    graft.traverse.Traverse.freeCheckpoint(levels.head)
-    if (levels.size >= 2) graft.traverse.Traverse.freeCheckpoint(levels.last)
+    if (deltaAbove ne acc) freeCheckpoint(deltaAbove)
+    freeCheckpoint(levels.head)
+    if (levels.size >= 2) freeCheckpoint(levels.last)
     if (acc == null)
       seeds.sparkSession.emptyDataFrame
         .withColumn("vid", lit("")).withColumn("bc", lit(0.0)).limit(0)
@@ -1239,22 +1086,25 @@ object GraphAlgos {
       // order, so it IS the last running sum). The first-over-threshold
       // pick replaces the row_number window with a boundary filter:
       // running sums are strictly increasing, so the picked row is
-      // exactly the one with cw > t and previous-cumulative = cw - w
-      // <= t — exact arithmetic because every weight is dyadic
-      // (0.25 / 1.0 defaults; see the node2vecWalks scaladoc) and the
-      // sums stay exact in IEEE double.
-      val ordered = Window.partitionBy("walker").orderBy("cand")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val whole = Window.partitionBy("walker").orderBy("cand")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      // exactly the one with cw > t and previous running sum pcw <= t.
+      // pcw is the previous row's cw (lag(cw, 1, 0.0)) computed as the
+      // same running sum one row short — a third frame on the same
+      // spec, so the Window node stays single (a lag OVER cw would stack
+      // a second one). Reconstructing it as cw - w instead rounds for
+      // non-dyadic weights (p = 3 makes backW = 1/3) and picks two rows
+      // or none when t falls in the rounding gap.
+      val byCand = Window.partitionBy("walker").orderBy("cand")
       val scored = wts
-        .withColumn("cw", sum(col("w")).over(ordered))
-        .withColumn("tw", sum(col("w")).over(whole))
+        .withColumn("cw", sum(col("w")).over(byCand
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("pcw", coalesce(sum(col("w")).over(byCand
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0.0)))
+        .withColumn("tw", sum(col("w")).over(byCand
+          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
         .withColumn("t",
           (conv(substring(md5(concat(col("walker"), lit(s"|$i"))), 1, 13),
             16, 10).cast("double") / TwoPow52) * col("tw"))
-      val picked = scored.filter(col("cw") > col("t") &&
-        col("cw") - col("w") <= col("t"))
+      val picked = scored.filter(col("cw") > col("t") && col("pcw") <= col("t"))
       // NOT freed (randomWalks posture): each step's frame stays
       // referenced by the accumulated output union until the i%8 re-mat
       cur = picked.select(col("walker"), col("cand").as("cur"),
@@ -1266,8 +1116,7 @@ object GraphAlgos {
     }
     // per-step curs were checkpointed eagerly — the stored persist can go
     if (stored)
-      try { simple.unpersist(blocking = false) }
-      catch { case _: Throwable => () }
+      graft.Ckpt.quietly(simple.unpersist(blocking = false))
     out
   }
 
@@ -1279,13 +1128,11 @@ object GraphAlgos {
     * the state frame checkpointed per round so plan depth stays
     * constant. Path sums associate left-to-right, so an external
     * oracle replays them bit-for-bit. */
-  def sssp(edges: DataFrame, source: String, iters: Int): DataFrame = {
-    val adj = new FrameAdjacency(
+  def sssp(edges: DataFrame, source: String, iters: Int): DataFrame =
+    withAdj(new FrameAdjacency(
       edges.select(col("src"), col("dst"),
-        col("weight").cast("double").as("w")), keep = Seq("w"))
-    try ssspLoop(edges.sparkSession, adj, source, iters, col("w"))
-    finally adj.release()
-  }
+        col("weight").cast("double").as("w")), keep = Seq("w")))(
+      sssp(edges.sparkSession, _, source, iters, col("w")))
 
   /** SSSP over a pre-built directed [[Adjacency]] that `keep`s the
     * columns `w` references (the GraphStore path: weight derived from
@@ -1296,24 +1143,9 @@ object GraphAlgos {
   def sssp(spark: org.apache.spark.sql.SparkSession, adj: Adjacency,
            source: String, iters: Int,
            w: org.apache.spark.sql.Column): DataFrame =
-    ssspLoop(spark, adj, source, iters, w)
-
-  private def ssspLoop(spark: org.apache.spark.sql.SparkSession,
-                       adj: Adjacency, source: String, iters: Int,
-                       w: org.apache.spark.sql.Column): DataFrame = {
-    var dist = spark.range(1)
-      .select(lit(source).as("vid"), lit(0.0).as("dist"))
-      .mat()
-    var round = 0
-    while (round < iters) {
-      val ext = adj.send(dist, Seq((col("dist") + w).as("dist")))
-      val upd = dist.unionByName(ext)
+    Superstep.run(spark.range(1)
+        .select(lit(source).as("vid"), lit(0.0).as("dist")), iters) { (dist, _) =>
+      dist.unionByName(adj.send(dist, Seq((col("dist") + w).as("dist"))))
         .groupBy("vid").agg(min(col("dist")).as("dist"))
-        .mat()
-      graft.traverse.Traverse.freeCheckpoint(dist)
-      dist = upd
-      round += 1
-    }
-    dist
-  }
+    }._1
 }

@@ -58,7 +58,7 @@ object Decontaminate {
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_bad_grams"), min(col("g")).as("first_gram"))
       .mat()
-    try { bad.unpersist(blocking = false); () } catch { case _: Throwable => () }
+    graft.Ckpt.quietly(bad.unpersist(blocking = false))
     hits
   }
 

@@ -155,7 +155,7 @@ object Traverse {
 
   def releaseEdges(e: DataFrame, steps: Int): Unit =
     if (steps > 1)
-      try { e.unpersist(blocking = false); () } catch { case _: Throwable => () }
+      graft.Ckpt.quietly(e.unpersist(blocking = false))
 
   /** Free the block-manager storage behind the `localCheckpoint`ed
     * frames in `df`'s lineage. Session cache hygiene (round-4 VERDICT
@@ -169,14 +169,12 @@ object Traverse {
     * (spark.graft.checkpointDir set — see graft.Ckpt) freeing is
     * always recoverable: unpersist only drops the cache over the
     * checkpoint files. */
-  def freeCheckpoint(df: DataFrame): Unit =
-    try {
-      df.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
-    } catch { case _: Throwable => () }
+  def freeCheckpoint(df: DataFrame): Unit = graft.Ckpt.quietly(
+    df.queryExecution.analyzed.foreach {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        org.apache.spark.sql.graft.InternalBridge.unpersist(l.rdd)
+      case _ => ()
+    })
 
   private def persistIfMultiStep(e: DataFrame, steps: Int): DataFrame =
     persistEdges(e, steps)

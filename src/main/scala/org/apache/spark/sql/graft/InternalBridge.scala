@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.AttributeSet
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
@@ -7,7 +8,8 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Narrow bridge into `private[sql]` surface. Two purposes:
+/** Narrow bridge into `private[sql]`/`private[spark]` surface. Three
+  * purposes:
   *
   * 1. Stripping ORIGIN STATISTICS from checkpointed frames.
   * `Dataset.checkpoint`/`localCheckpoint` wrap the materialized RDD in
@@ -43,8 +45,24 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * Safety: adopted expressions must reference only the LogicalRDD's
   * own output attributes (exprIds are shared with the logical plan;
   * anything else — e.g. a layout keyed on a pruned column — is
-  * skipped). */
+  * skipped).
+  *
+  * 3. Freeing a superseded local checkpoint without the WARN that
+  * `RDD.unpersist` logs for every locally checkpointed RDD (its
+  * lineage is truncated, so it cannot be recomputed) — the loops free
+  * such states on purpose, once per round, and the warning buried the
+  * logs. */
 object InternalBridge {
+  /** Drop `rdd`'s blocks without blocking. A local checkpoint (one
+    * with no checkpoint file) goes straight to
+    * `SparkContext.unpersistRDD`, the call `unpersist` makes after its
+    * warning; every other RDD (reliable checkpoints, plain caches)
+    * takes the public path unchanged. */
+  def unpersist(rdd: RDD[_]): Unit =
+    if (rdd.isCheckpointed && rdd.getCheckpointFile.isEmpty)
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+    else rdd.unpersist(blocking = false)
+
   def stripOriginStats(df: DataFrame): DataFrame =
     rebuild(df, None, 0)
 

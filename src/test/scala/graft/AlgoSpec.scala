@@ -28,6 +28,29 @@ class AlgoSpec extends SparkSpec {
     assert(labels("x1") == "x1" && labels("x2") == "x1")
   }
 
+  test("WCC untilConverged frees every superseded round's state") {
+    import spark.implicits._
+    // the diameter-8 chain above: ~9 rounds, each checkpointing a state
+    val verts = (1 to 9).map(i => s"v$i").toDF("vid")
+    val edges = (1 to 8).map(i => (s"v$i", s"v${i + 1}")).toDF("src", "dst")
+    // RDDs take the thread's call site as their creation site, which
+    // tells this run's persisted RDDs from concurrent suites' ones
+    val sc = spark.sparkContext
+    val site = s"wcc-state-${System.nanoTime()}"
+    sc.setCallSite(site)
+    val out =
+      try GraphAlgos.connectedComponents(verts, edges, 50, untilConverged = true)
+      finally sc.clearCallSite()
+    val live = sc.getPersistentRDDs.collect {
+      case (id, r) if r.toString.endsWith(s" at $site") => id
+    }.toSet
+    val result = out.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    assert(live == result, s"persisted beyond the result's state: ${live -- result}")
+    assert(out.as[(String, String)].collect().forall(_._2 == "v1"))
+  }
+
   test("PageRank tol-mode stops early and matches long fixed run") {
     import spark.implicits._
     val verts = (1 to 6).map(i => s"v$i").toDF("vid")
@@ -225,6 +248,20 @@ class AlgoSpec extends SparkSpec {
     assert(pinned == exact, s"pinned != exact: $pinned")
   }
 
+  test("sccUntilConverged fails loudly when maxRounds is below the coloring diameter") {
+    import spark.implicits._
+    // one 8-cycle: v1's color needs 7 rounds to reach v8
+    val verts = (1 to 8).map(i => s"v$i").toDF("vid")
+    val edges = (1 to 8).map(i => (s"v$i", s"v${i % 8 + 1}")).toDF("src", "dst")
+    val e = intercept[IllegalArgumentException](
+      GraphAlgos.sccUntilConverged(verts, edges, maxRounds = 3))
+    assert(e.getMessage.contains("scc coloring did not converge within 3 rounds"),
+      e.getMessage)
+    val ok = GraphAlgos.sccUntilConverged(verts, edges, maxRounds = 8)
+      .as[(String, String)].collect().toMap
+    assert(ok == (1 to 8).map(i => s"v$i" -> "v1").toMap, s"scc: $ok")
+  }
+
   test("hanp: degree-weighted votes, min-label ties, 1/16 attenuation") {
     import spark.implicits._
     // path a-b-c: deg a=1, b=2, c=1
@@ -272,6 +309,25 @@ class AlgoSpec extends SparkSpec {
     starts.as[String].collect().foreach { v =>
       assert(back((v, 2)) == v, s"backW=1024 walk from $v did not return")
     }
+  }
+
+  test("node2vecWalks picks exactly one candidate per step for non-dyadic weights") {
+    import spark.implicits._
+    // path a-b-c with backW = 1/3 (p = 3). Walker a's step 2 weighs
+    // a (1/3) then c (outW); this outW puts a's md5 threshold t at
+    // 0.33333333333333326, the rounded (1/3 + outW) − outW, just below
+    // the true running sum 1/3 before c — where a pick that rebuilds
+    // that sum as cw − w takes both candidates
+    val und = Seq(("a", "b"), ("b", "c"))
+      .flatMap { case (x, y) => Seq((x, y), (y, x)) }.toDF("src", "dst")
+    val starts = Seq("a", "b", "c").toDF("vid")
+    val rows = GraphAlgos.node2vecWalks(und, starts, len = 4,
+        backW = 1.0 / 3, outW = 1.3142018994281148)
+      .as[(String, Int, String)].collect()
+    val perStep = rows.groupBy(r => (r._1, r._2)).map { case (k, v) => k -> v.length }
+    for (w <- Seq("a", "b", "c"); step <- 0 to 4)
+      assert(perStep.get((w, step)).contains(1),
+        s"walker $w step $step: ${perStep.getOrElse((w, step), 0)} rows")
   }
 
   test("betweenness: diamond splits dependency, chain accumulates it") {
