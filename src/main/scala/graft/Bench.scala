@@ -32,19 +32,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // data-size-derived (Tune): identical to `cpus` at driver scale,
-    // grows with the dataset so ladder runs aren't partition-starved
-    val shuffleParts = Tune.shufflePartitions(sfDir, cpus.toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // local[SPARK_GRAFT_CPUS] with data-size-derived (Tune) shuffle
+    // partitions: the core count up to sf0.1, growing with the dataset
+    // so ladder runs aren't partition-starved
+    val spark = Harness.tuned(sfDir, "WARN")
     // JVM/codegen warmup so the first measured query doesn't absorb
     // Spark's one-time startup cost
     spark.range(1000).selectExpr("sum(id)").collect()

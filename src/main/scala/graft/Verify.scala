@@ -1,33 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER overrides the master — the cluster-mode
     // correctness gate runs the SAME 136-query dump on
     // local-cluster[2,2,*] (separate executor JVMs) and compares the
     // parquet results against the DuckDB oracle HASHES, catching
     // partition-order/window-determinism bugs a single-JVM run hides.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions",
-        Tune.shufflePartitions(sfDir, cpus.toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val master = sys.env.get("SPARK_GRAFT_MASTER")
     // multi-executor runs exercise the durable checkpoint path (Ckpt):
     // local checkpoints live in executor memory and die with executors.
     // cleanCheckpoints lets the ContextCleaner delete files of freed
     // checkpoints DURING the run; the shutdown hook removes the root
     // afterwards (reliable files otherwise accumulate for all ~137
     // queries' every iteration round).
-    if (master.startsWith("local-cluster")) {
+    val ckptConf = if (master.exists(_.startsWith("local-cluster"))) {
       val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
         try {
@@ -37,11 +27,10 @@ object Verify {
           }
           rm(ckpt.toFile)
         } catch { case _: Throwable => () }))
-      builder.config("spark.graft.checkpointDir", ckpt.toString)
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      Seq("spark.graft.checkpointDir" -> ckpt.toString,
+        "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true")
+    } else Nil
+    val spark = Harness.tuned(sfDir, "WARN", master, ckptConf)
     // store-backing on: every graph query rides the bucketed layout,
     // built once per dataset (GraphStore.ensure) under a JVM-managed
     // root (deleted on exit). SPARK_GRAFT_STORE=off (same knob as

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 
-/** Catalog abstraction the query surfaces (nql.Gql, plans.MatchBuilder)
+/** Catalog abstraction the query surfaces (nql.Gql, nql.MatchSeg)
   * plan against: per-tag vertex tables `(vid, props...)`, per-type edge
   * tables `(src, dst, rank, props...)`, and the union views. The
   * reference's equivalent is the meta-service schema catalog

@@ -1103,7 +1103,9 @@ object Gql {
   def exec(g: GraphCatalog, stmt: Stmt): DataFrame = exec(g, stmt, Map.empty)
 
   def exec(g: GraphCatalog, stmt: Stmt, env: Map[String, DataFrame]): DataFrame = {
-    val spark = g.allVertices.sparkSession
+    // lazy: building the all-vertex view reads every tag table, which
+    // MATCH statements never need here
+    lazy val spark = g.allVertices.sparkSession
     stmt match {
       case m: MatchSeg.MStmt => MatchSeg.exec(g, m)
       case d: Dml.DStmt => Dml.exec(g, d, env, None)

@@ -454,6 +454,10 @@ object MatchSeg {
     val declOrder = scala.collection.mutable.ListBuffer.empty[String]
     /** (var, tag) pairs whose prop columns are bound in the frame. */
     val boundTags = scala.collection.mutable.Set.empty[(String, String)]
+    /** Vertex vars whose every value is a stored vertex: bound by a
+      * label or all-vertex seek, or as a tag-joined hop end. An
+      * untagged hop end may name a dangling edge endpoint. */
+    val seekedVars = scala.collection.mutable.Set.empty[String]
     var anon = 0
     def freshVar(): String = { anon += 1; s"__n$anon" }
     def knownTag(t: String): Boolean = g.tagNames.contains(t)
@@ -563,6 +567,7 @@ object MatchSeg {
     * all-vertices vid scan. */
   private def nodeFrame(g: GraphCatalog, st: BState, n: Node, v: String): DataFrame = {
     st.addVertex(v)
+    st.seekedVars += v
     if (n.tags.isEmpty) {
       require(n.props.isEmpty, "props on an untagged node")
       g.allVertices.select(col("vid").as(v)).distinct()
@@ -949,6 +954,7 @@ object MatchSeg {
           // label constraint: inner join the tag table
           out = out.join(tagFrame(g, t, w), Seq(w))
           st.boundTags += (w -> t)
+          st.seekedVars += w
         }
         applyPropSeeds(nodePropFilter(out, w, node.tags, node.props),
           w, propSeeds)
@@ -1348,28 +1354,28 @@ object MatchSeg {
     }
   }
 
+  /** A pattern expression's named alias: a node or an edge, bound
+    * either by the outer binding (`local` empty) or by an enclosing
+    * lambda / WITH column (`local` = how to compare against it). */
+  private case class PeAnchor(name: String, isEdge: Boolean, local: Option[LKind])
+
   /** Validate one pattern expression's variables against the current
     * scope (reference MatchValidator::validatePathInExpr messages) and
-    * attach its rollup column; returns the replacement expression. */
-  private def compilePatternE(ctx: PeCtx, pe: Expr.PatternE, bool: Boolean,
-                              lambdas: Map[String, LKind]): Expr.E = {
-    val st = ctx.st; val g = ctx.g
-    val part = pe.part
-    val bcols = ctx.binding.columns.toSet
+    * classify its anchors. */
+  private def peAnchors(st: BState, bcols: Set[String], part: Part,
+                        lambdas: Map[String, LKind]): Seq[PeAnchor] = {
     def fail(msg: String): Nothing =
       throw new IllegalArgumentException("SemanticError: " + msg)
-    // (name, isEdge, localKind)
-    case class Anchor(name: String, isEdge: Boolean, local: Option[LKind])
-    val anchors = scala.collection.mutable.LinkedHashMap.empty[String, Anchor]
+    val anchors = scala.collection.mutable.LinkedHashMap.empty[String, PeAnchor]
     part.nodes.foreach(_.v.foreach { a =>
       if (lambdas.contains(a)) lambdas(a) match {
         case LNodeVid | LNodeRendered | LOther =>
-          anchors.getOrElseUpdate(a, Anchor(a, false, Some(lambdas(a))))
+          anchors.getOrElseUpdate(a, PeAnchor(a, false, Some(lambdas(a))))
         case _ =>
           fail(s"`$a' is defined with type Edge, but referenced with type Node")
       }
       else if (st.vertexVars.contains(a))
-        anchors.getOrElseUpdate(a, Anchor(a, false, None))
+        anchors.getOrElseUpdate(a, PeAnchor(a, false, None))
       else if (st.edgeVars.contains(a))
         fail(s"`$a' is defined with type Edge, but referenced with type Node")
       else if (st.vlEdgeVars.contains(a))
@@ -1377,7 +1383,7 @@ object MatchSeg {
       else if (st.pathVars.contains(a))
         fail(s"`$a' is defined with type Path, but referenced with type Node")
       else if (bcols.contains(a))
-        anchors.getOrElseUpdate(a, Anchor(a, false, Some(LOther)))
+        anchors.getOrElseUpdate(a, PeAnchor(a, false, Some(LOther)))
       else fail(s"PatternExpression are not allowed to introduce new variables: `$a'.")
     })
     part.rels.foreach { rl => rl.v.foreach { a =>
@@ -1385,10 +1391,10 @@ object MatchSeg {
         if (lambdas.contains(a)) lambdas(a) match {
           case LNodeVid | LNodeRendered =>
             fail(s"`$a' is defined with type Node, but referenced with type Edge")
-          case k => anchors.getOrElseUpdate(a, Anchor(a, true, Some(k)))
+          case k => anchors.getOrElseUpdate(a, PeAnchor(a, true, Some(k)))
         }
         else if (st.edgeVars.contains(a))
-          anchors.getOrElseUpdate(a, Anchor(a, true, None))
+          anchors.getOrElseUpdate(a, PeAnchor(a, true, None))
         else if (st.vertexVars.contains(a))
           fail(s"`$a' is defined with type Node, but referenced with type Edge")
         else if (st.vlEdgeVars.contains(a))
@@ -1397,7 +1403,7 @@ object MatchSeg {
           // WITH-projected edge VALUE (`relationships(p)[1] AS e1`
           // then `(b)-[e1]->()`, bugfix/AliasTypeDeduce): anchor by
           // the rendered-edge identity string
-          anchors.getOrElseUpdate(a, Anchor(a, true, Some(LEdgeRendered)))
+          anchors.getOrElseUpdate(a, PeAnchor(a, true, Some(LEdgeRendered)))
         else fail(s"PatternExpression are not allowed to introduce new variables: `$a'.")
       } else {
         if (st.edgeVars.contains(a))
@@ -1410,26 +1416,119 @@ object MatchSeg {
         else fail(s"PatternExpression are not allowed to introduce new variables: `$a'.")
       }
     }}
+    anchors.values.toSeq
+  }
 
-    // expand the pattern on its own fresh state; the forced path var
-    // materializes every hop's edge columns for rendering
+  /** The pattern expanded on its own fresh state; the forced path var
+    * `__pep` materializes every hop's edge columns for rendering.
+    * `seed`, a frame holding the untagged head node's column, starts
+    * the expansion from those vids instead of every vertex. */
+  private def peFrame(g: GraphCatalog, part: Part,
+                      seed: Option[DataFrame] = None): (DataFrame, BState, PathInfo) = {
     val pv = "__pep"
     val st2 = new BState(g)
-    val frame0 = buildPart(g, st2, part.copy(pathVar = Some(pv)))
-    val info = st2.pathVars(pv)
+    seed.foreach(_ => part.nodes.head.v.foreach(st2.addVertex))
+    val frame = buildPart(g, st2, part.copy(pathVar = Some(pv)),
+      seedFrames = seed.toSeq)
+    (frame, st2, st2.pathVars(pv))
+  }
+
+  /** Join keys tying a pattern frame to the outer binding, one per
+    * outer anchor column: (frame column, hidden key name, binding
+    * column). An edge anchor keys on its full identity. */
+  private def peKeys(anchors: Seq[PeAnchor], binding: DataFrame)
+      : Seq[(Column, String, Column)] = {
+    val outerNodes = anchors.filter(a => a.local.isEmpty && !a.isEdge).map(_.name)
+    val outerEdges = anchors.filter(a => a.local.isEmpty && a.isEdge).map(_.name)
+    outerNodes.zipWithIndex.map { case (a, i) =>
+      (col(a), s"__pk_n$i", binding(a))
+    } ++ outerEdges.zipWithIndex.flatMap { case (a, i) =>
+      Seq("etype", "src", "dst", "rank").map(f =>
+        (col(s"${a}_$f"), s"__pk_e${i}_$f", binding(s"${a}_$f")))
+    }
+  }
+
+  /** PatternApply (PatternApplyExecutor.cpp:15) for a MATCH WHERE: each
+    * top-level AND conjunct that is a bare or NOT-ed pattern anchored
+    * only on bound variables becomes a left semi / left anti join
+    * against the pattern's distinct anchor keys, instead of a rollup
+    * that collects every matching path per row. A null anchor matches
+    * no key — the rollup's empty list — so semi drops the row and anti
+    * keeps it. Returns the filtered frame and the remaining conjuncts
+    * (None when every conjunct was a pattern). Any other pattern
+    * expression, or a conjunct that fails validation, stays on the
+    * rollup path, which raises the same errors in tree order. */
+  private def applyPatternConjuncts(g: GraphCatalog, st: BState,
+                                    df0: DataFrame, w: Expr.E)
+      : (DataFrame, Option[Expr.E]) = {
+    def conjuncts(e: Expr.E): List[Expr.E] = e match {
+      case Expr.Bin("and", l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => List(other)
+    }
+    var df = df0
+    // joins `df` against the pattern's keys; false = not applicable
+    def patternApply(part: Part, anti: Boolean): Boolean = {
+      val anchors =
+        try peAnchors(st, df.columns.toSet, part, Map.empty)
+        catch { case _: IllegalArgumentException => Nil }
+      anchors.nonEmpty && anchors.forall(_.local.isEmpty) && {
+        val keys = peKeys(anchors, df)
+        val matched = anchoredFrame(g, st, df, part, anchors)
+          .select(keys.map { case (c, n, _) => c.as(n) }: _*).distinct()
+        val cond = keys.map { case (_, n, bc) => bc === matched(n) }.reduce(_ && _)
+        df = df.join(matched, cond, if (anti) "left_anti" else "left_semi")
+        true
+      }
+    }
+    val cs = conjuncts(w)
+    val rest = cs.filterNot {
+      case Expr.PatternE(part) => patternApply(part, anti = false)
+      case Expr.Un("not", Expr.PatternE(part)) => patternApply(part, anti = true)
+      case _ => false
+    }
+    // untouched WHEREs keep their exact tree
+    if (rest.size == cs.size) (df0, Some(w))
+    else (df, rest.reduceOption(Expr.Bin("and", _, _)))
+  }
+
+  /** A pattern's matches for the semi/anti join. An untagged head
+    * anchor expands only from the binding's vids that are vertices —
+    * the rows the rollup's all-vertex head keeps after its prune —
+    * and `(a)-[:t]-()` needs no path frame at all: it holds where an
+    * edge of type t leaves `a`. */
+  private def anchoredFrame(g: GraphCatalog, st: BState, df: DataFrame,
+                            part: Part, anchors: Seq[PeAnchor]): DataFrame = {
+    val head = part.nodes.head
+    val headAnchor = head.v.filter(v => head.tags.isEmpty && head.props.isEmpty &&
+      part.sp.isEmpty && anchors.exists(a => a.name == v && !a.isEdge))
+    def vertices(f: DataFrame, v: String): DataFrame =
+      if (st.seekedVars(v)) f
+      else f.join(g.allVertices.select(col("vid").as(v)), Seq(v), "left_semi")
+    (headAnchor, part.nodes, part.rels) match {
+      case (Some(v), List(_, Node(None, Nil, Nil)), List(rel))
+          if rel.v.isEmpty && rel.range.isEmpty && rel.props.isEmpty =>
+        vertices(Traverse.orientDedup(edgeBase(g, rel), rel.dir)
+          .select(col("src").as(v)), v)
+      case (Some(v), _, _) => peFrame(g, part, Some(vertices(df.select(col(v)), v)))._1
+      case _ => peFrame(g, part)._1
+    }
+  }
+
+  /** Validate one pattern expression's variables and attach its rollup
+    * column; returns the replacement expression. */
+  private def compilePatternE(ctx: PeCtx, pe: Expr.PatternE, bool: Boolean,
+                              lambdas: Map[String, LKind]): Expr.E = {
+    val anchors = peAnchors(ctx.st, ctx.binding.columns.toSet, pe.part, lambdas)
+    val (frame0, st2, info) = peFrame(ctx.g, pe.part)
     val strVid = frame0.schema(info.nodes.head).dataType ==
       org.apache.spark.sql.types.StringType
     var frame = frame0
     // prune the expansion to anchor values the binding can see
-    val outerNodes = anchors.values.filter(a => a.local.isEmpty && !a.isEdge)
-      .map(_.name).toSeq
-    val outerEdges = anchors.values.filter(a => a.local.isEmpty && a.isEdge)
-      .map(_.name).toSeq
-    outerNodes.foreach { a =>
-      frame = frame.join(ctx.binding.select(col(a)).distinct(),
-        Seq(a), "left_semi")
+    anchors.filter(a => a.local.isEmpty && !a.isEdge).foreach { a =>
+      frame = frame.join(ctx.binding.select(col(a.name)).distinct(),
+        Seq(a.name), "left_semi")
     }
-    val locals = anchors.values.filter(_.local.isDefined).toSeq
+    val locals = anchors.filter(_.local.isDefined)
 
     val pathC = renderPath(st2, info, strVid)
     def edgeRendered(a: String): Column =
@@ -1449,14 +1548,7 @@ object MatchSeg {
     val elemType = frame.select(elem).schema.head.dataType
 
     val peCol = s"__pe${peCounter.incrementAndGet()}"
-    // (frame key col → hidden name, matching binding col)
-    val keySpecs: Seq[(Column, String, Column)] =
-      outerNodes.zipWithIndex.map { case (a, i) =>
-        (col(a), s"__pk_n$i", ctx.binding(a))
-      } ++ outerEdges.zipWithIndex.flatMap { case (a, i) =>
-        Seq("etype", "src", "dst", "rank").map(f =>
-          (col(s"${a}_$f"), s"__pk_e${i}_$f", ctx.binding(s"${a}_$f")))
-      }
+    val keySpecs = peKeys(anchors, ctx.binding)
     if (keySpecs.isEmpty) {
       val global = frame.agg(collect_list(elem).as(peCol))
       ctx.binding = ctx.binding.crossJoin(broadcast(global))
@@ -2703,24 +2795,30 @@ object MatchSeg {
       // refs to EARLIER-stage variables (WITH columns, prior vars)
       // force a post-join filter
       val (preW, postW) = cl.where.toSeq.partition(whereResolvable(st, frame, _))
-      preW.foreach { w =>
-        frame = ensureTags(g, st, frame, Seq(w))
-        val (f2, w2) = preparePatternExprs(g, st, frame, Seq(w),
-          bool = true, render = false)
-        frame = f2
-        frame = truthyFilter(frame, w2.head, resolver(st, frame))
+      preW.foreach { w0 =>
+        frame = ensureTags(g, st, frame, Seq(w0))
+        val (f1, rest) = applyPatternConjuncts(g, st, frame, w0)
+        frame = f1
+        rest.foreach { w =>
+          val (f2, w2) = preparePatternExprs(g, st, frame, Seq(w),
+            bool = true, render = false)
+          frame = truthyFilter(f2, w2.head, resolver(st, f2))
+        }
       }
       binding =
         if (binding == null) frame
         else joinShared(st, binding, frame,
           joinType = if (cl.optional) "left_outer" else "inner")
       binding = applyPendingEdgeEq(binding)
-      postW.foreach { w =>
-        binding = ensureTags(g, st, binding, Seq(w))
-        val (b2, w2) = preparePatternExprs(g, st, binding, Seq(w),
-          bool = true, render = false)
-        binding = b2
-        binding = truthyFilter(binding, w2.head, resolver(st, binding))
+      postW.foreach { w0 =>
+        binding = ensureTags(g, st, binding, Seq(w0))
+        val (b1, rest) = applyPatternConjuncts(g, st, binding, w0)
+        binding = b1
+        rest.foreach { w =>
+          val (b2, w2) = preparePatternExprs(g, st, binding, Seq(w),
+            bool = true, render = false)
+          binding = truthyFilter(b2, w2.head, resolver(st, b2))
+        }
       }
       }
     }

@@ -3,25 +3,14 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Join & apply operators (SURVEY.md §2.3). The reference implements all
-  * of these as single-node hash joins (InnerJoinExecutor.cpp:12-70 picks
-  * the smaller side as build); on Spark the join *strategy* belongs to
+/** Apply operators (SURVEY.md §2.3). The reference implements these
+  * as single-node hash joins (InnerJoinExecutor.cpp:12-70 picks the
+  * smaller side as build); on Spark the join *strategy* belongs to
   * Catalyst/AQE (broadcast for small sides, sort-merge/shuffled-hash
-  * otherwise), so these wrappers only pin semantics.
+  * otherwise), so these only pin semantics. Inner, left and cross
+  * joins are plain `join`/`crossJoin` calls.
   */
 object Apply {
-
-  /** InnerJoin / HashInnerJoin (InnerJoinExecutor.cpp:12). */
-  def innerJoin(l: DataFrame, r: DataFrame, keys: Seq[String]): DataFrame =
-    l.join(r, keys, "inner")
-
-  /** LeftJoin (LeftJoinExecutor.cpp:14) — OPTIONAL MATCH / `$-` pipes. */
-  def leftJoin(l: DataFrame, r: DataFrame, keys: Seq[String]): DataFrame =
-    l.join(r, keys, "left_outer")
-
-  /** CrossJoin / CartesianProduct (CartesianProductExecutor.cpp:13) —
-    * disconnected MATCH patterns. */
-  def crossJoin(l: DataFrame, r: DataFrame): DataFrame = l.crossJoin(r)
 
   /** RollUpApply (RollUpApplyExecutor.cpp:15-70): for each left row,
     * collect the matching right-side values into a list column — the

@@ -3,28 +3,16 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Core relational operators (SURVEY.md §2.2/§2.4/§2.7) with the
-  * reference's semantics where they diverge from raw Spark defaults.
-  * Most are thin — by design: the point is to pin the *semantics*
-  * (empty-input agg defaults, set-op column rules, unwind scalar-wrap)
-  * while letting Catalyst own the physical plan (hash agg with partial
-  * aggregation, TakeOrderedAndProject for TopN, broadcast/SMJ choice
-  * for joins — all free, SURVEY §4.2).
+/** Core relational operators (SURVEY.md §2.2/§2.4/§2.7) where the
+  * reference's semantics diverge from raw Spark defaults: empty-input
+  * agg defaults, set-op column rules, unwind scalar-wrap, reproducible
+  * sampling. Project, Filter, Dedup, Sort and Limit are plain
+  * DataFrame calls (`select`, `filter`, `distinct`, `orderBy`,
+  * `offset`/`limit`) with identical semantics, so they have no
+  * wrapper; Catalyst owns every physical plan (hash agg with partial
+  * aggregation, TakeOrderedAndProject for TopN — SURVEY §4.2).
   */
 object Relational {
-
-  /** Project (ProjectExecutor.cpp:13). */
-  def project(df: DataFrame, exprs: Column*): DataFrame = df.select(exprs: _*)
-
-  /** Filter keeps truthy rows; null/empty conditions drop — Spark
-    * matches (FilterExecutor.cpp:13). */
-  def filter(df: DataFrame, cond: Column): DataFrame = df.filter(cond)
-
-  /** Dedup = distinct on full row (DedupExecutor.cpp:12). */
-  def dedup(df: DataFrame): DataFrame = df.distinct()
-
-  /** Sort (SortExecutor.cpp:12-47): multi-key total sort. */
-  def sort(df: DataFrame, keys: Column*): DataFrame = df.orderBy(keys: _*)
 
   /** TopN = Sort + offset + limit fused (TopNExecutor.cpp:12-60).
     * Catalyst plans orderBy+limit as TakeOrderedAndProject — the same
@@ -34,10 +22,6 @@ object Relational {
     val sorted = df.orderBy(keys: _*)
     if (offset > 0) sorted.offset(offset).limit(n) else sorted.limit(n)
   }
-
-  /** Limit with offset (LimitExecutor.cpp:12). */
-  def limit(df: DataFrame, n: Int, offset: Int = 0): DataFrame =
-    if (offset > 0) df.offset(offset).limit(n) else df.limit(n)
 
   /** Sample n rows (SampleExecutor.cpp:12-33). Deterministic variant:
     * pseudo-random order by md5 of a key — reproducible across runs and

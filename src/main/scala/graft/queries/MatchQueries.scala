@@ -1,54 +1,41 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.graph.GraphModel
-import graft.plans.MatchBuilder
-import graft.traverse.Traverse.In
 
 /** SparkEntry registrations for the MATCH clause-pipeline surface
   * (SURVEY.md §3 entry point 1): label seek → expand → append props →
-  * where, plus OPTIONAL MATCH (left join connector) and pattern
-  * predicates (semi/anti) — all through graft.plans.MatchBuilder. */
+  * where, OPTIONAL MATCH (left join connector) and pattern predicates
+  * (semi/anti) — all MATCH text through nql.MatchSeg. */
 object MatchQueries {
   type Q = (SparkSession, String) => DataFrame
 
   private def gm(s: SparkSession, dir: String) = GraphModel(s, dir)
 
   val queries: Map[String, Q] = Map(
-    // MATCH (c:customer {mktsegment})-[:placed]->(o:order) WHERE ...
-    "q_match_basic" -> ((s, dir) => {
-      val g = gm(s, dir)
-      MatchBuilder(g)
-        .seek("customer", "c", col("mktsegment") === "BUILDING")
-        .expand("c", "placed", "o")
-        .withProps("o", "order")
-        .where(col("o_totalprice") > 300000)
-        .ret(col("c"), col("c_name"), col("o"), col("o_totalprice"))
-    }),
+    // label seek + one hop + prop predicates on both ends
+    "q_match_basic" -> ((s, dir) =>
+      graft.nql.Gql.run(gm(s, dir),
+        """MATCH (c:customer)-[:placed]->(o:order)
+          |WHERE c.customer.mktsegment == "BUILDING" AND o.order.totalprice > 300000
+          |RETURN id(c) AS c, c.customer.name AS c_name, id(o) AS o,
+          |       o.order.totalprice AS o_totalprice""".stripMargin)),
+    // OPTIONAL MATCH keeping order-less customers; nGQL rejects WHERE
+    // inside OPTIONAL MATCH, so the price filter is a collect over the
+    // optional rows and an empty list unwinds to one NULL
+    "q_match_optional" -> ((s, dir) =>
+      graft.nql.Gql.run(gm(s, dir),
+        """MATCH (c:customer) WHERE toInteger(substr(id(c), 2, 10)) <= 100
+          |OPTIONAL MATCH (c)-[p:placed]->(o:order)
+          |WITH c, collect(CASE WHEN p.totalprice > 400000 THEN id(o) END) AS os
+          |UNWIND CASE WHEN size(os) == 0 THEN [NULL] ELSE os END AS o
+          |RETURN id(c) AS c, o""".stripMargin)),
+    // anti pattern predicate: planned as a left anti join (PatternApply)
+    "q_match_pattern_pred" -> ((s, dir) =>
+      graft.nql.Gql.run(gm(s, dir),
+        """MATCH (p:part) WHERE NOT (p)<-[:has_part]-()
+          |RETURN id(p) AS p, p.part.name AS p_name""".stripMargin)),
 
-    // MATCH (c:customer) OPTIONAL MATCH (c)-[:placed]->(o big) RETURN
-    "q_match_optional" -> ((s, dir) => {
-      val g = gm(s, dir)
-      val bigOrders = g.placed.filter(col("totalprice") > 400000)
-        .select(col("src").as("c"), col("dst").as("o"))
-      MatchBuilder(g)
-        .seek("customer", "c",
-          expr("CAST(substr(vid, 3, 10) AS BIGINT) <= 100"))
-        .optional(bigOrders, Seq("c"))
-        .ret(col("c"), col("o"))
-    }),
-
-    // MATCH (p:part) WHERE NOT (p)<-[:has_part]-() — anti pattern pred
-    "q_match_pattern_pred" -> ((s, dir) => {
-      val g = gm(s, dir)
-      MatchBuilder(g)
-        .seek("part", "p")
-        .wherePattern("p", "has_part", anti = true, dir = In)
-        .ret(col("p"), col("p_name"))
-    }),
-
-    // ---- MATCH as TEXT through the parser (nql.MatchSeg) ----
     // label seek + boolean WHERE + ORDER/LIMIT
     "q_nql_match_seek" -> ((s, dir) =>
       graft.nql.Gql.run(gm(s, dir),

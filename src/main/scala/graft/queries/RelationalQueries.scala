@@ -25,19 +25,19 @@ object RelationalQueries {
   val queries: Map[String, Q] = Map(
     // Project (ProjectExecutor.cpp:13): expression list → columns
     "q_project" -> ((s, dir) =>
-      R.project(t(s, dir, "lineitem"),
+      t(s, dir, "lineitem").select(
         col("l_orderkey"), col("l_linenumber"),
         roundPortable(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4).as("net"))),
 
     // Filter truthiness (FilterExecutor.cpp:13)
     "q_filter" -> ((s, dir) =>
-      R.filter(t(s, dir, "lineitem"),
-          col("l_quantity") > 45 && col("l_returnflag") === "R")
+      t(s, dir, "lineitem")
+        .filter(col("l_quantity") > 45 && col("l_returnflag") === "R")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))),
 
     // Dedup (DedupExecutor.cpp:12)
     "q_dedup" -> ((s, dir) =>
-      R.dedup(t(s, dir, "lineitem").select(col("l_returnflag"), col("l_linestatus")))),
+      t(s, dir, "lineitem").select(col("l_returnflag"), col("l_linestatus")).distinct()),
 
     // TopN = sort+offset+limit fused (TopNExecutor.cpp:12-60)
     "q_topn" -> ((s, dir) =>
@@ -46,8 +46,8 @@ object RelationalQueries {
 
     // Limit with offset (LimitExecutor.cpp:12) over a unique sort key
     "q_limit_offset" -> ((s, dir) =>
-      R.limit(t(s, dir, "orders").select(col("o_orderkey")).orderBy(col("o_orderkey")),
-        50, 10)),
+      t(s, dir, "orders").select(col("o_orderkey")).orderBy(col("o_orderkey"))
+        .offset(10).limit(50)),
 
     // Sample (SampleExecutor.cpp:12-33), deterministic md5 order
     "q_sample" -> ((s, dir) =>
@@ -90,26 +90,23 @@ object RelationalQueries {
 
     // InnerJoin (InnerJoinExecutor.cpp:12)
     "q_inner_join" -> ((s, dir) =>
-      Apply.innerJoin(
-          t(s, dir, "orders").filter(col("o_totalprice") > 400000)
-            .withColumnRenamed("o_custkey", "c_custkey"),
-          t(s, dir, "customer"), Seq("c_custkey"))
+      t(s, dir, "orders").filter(col("o_totalprice") > 400000)
+        .withColumnRenamed("o_custkey", "c_custkey")
+        .join(t(s, dir, "customer"), Seq("c_custkey"), "inner")
         .select(col("o_orderkey"), col("c_name"))),
 
     // LeftJoin (LeftJoinExecutor.cpp:14) — customers w/o orders keep null
     "q_left_join" -> ((s, dir) =>
-      Apply.leftJoin(
-          t(s, dir, "customer").filter(col("c_custkey") <= 200)
-            .select(col("c_custkey")),
-          t(s, dir, "orders").select(col("o_custkey").as("c_custkey"), col("o_orderkey")),
-          Seq("c_custkey"))
+      t(s, dir, "customer").filter(col("c_custkey") <= 200)
+        .select(col("c_custkey"))
+        .join(t(s, dir, "orders").select(col("o_custkey").as("c_custkey"), col("o_orderkey")),
+          Seq("c_custkey"), "left_outer")
         .select(col("c_custkey"), col("o_orderkey"))),
 
     // CrossJoin (CartesianProductExecutor.cpp:13)
     "q_cross_join" -> ((s, dir) =>
-      Apply.crossJoin(
-        t(s, dir, "region").select(col("r_name")),
-        t(s, dir, "orders").select(col("o_orderstatus")).distinct())),
+      t(s, dir, "region").select(col("r_name"))
+        .crossJoin(t(s, dir, "orders").select(col("o_orderstatus")).distinct())),
 
     // RollUpApply = pattern comprehension (RollUpApplyExecutor.cpp:15-70):
     // empty-match rows get an empty list, output joined for stability

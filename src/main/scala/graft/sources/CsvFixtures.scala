@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.graph.{GraphCatalog, MapCatalog}
 
 /** Loader for the reference's CSV fixture convention (FIXTURES.md;
   * reference importer headers, tests/data/nba/player.csv:1 and
@@ -143,4 +144,42 @@ object CsvFixtures {
     Seq("vid", "src", "dst").filter(df.columns.contains)
       .foldLeft(df)((d, c) =>
         d.withColumn(c, graft.functions.NebulaHash.hashCol(col(c))))
+
+  /** The reference's TCK fixture spaces under `dataDir` (its
+    * tests/data): `nba` (player ∪ null.csv, team, bachelor; like,
+    * serve, teammate), `nba_int_vid` (the same CSVs with hashed vids),
+    * `student`, and `ngdata` (every CSV of its directory). */
+  def tckCatalogs(spark: SparkSession, dataDir: String): Map[String, MapCatalog] = {
+    def space(dir: String, tags: Seq[String], edges: Seq[String]) = MapCatalog(
+      tags = tags.map(t => t -> load(spark, s"$dataDir/$dir/$t.csv")).toMap,
+      edges = edges.map(e => e -> load(spark, s"$dataDir/$dir/$e.csv")).toMap)
+    val nba0 = space("nba", Seq("player", "team", "bachelor"),
+      Seq("like", "serve", "teammate"))
+    // null.csv holds players whose properties are NULL
+    val nba = nba0.copy(tags = nba0.tags.updated("player",
+      nba0.tags("player").unionByName(load(spark, s"$dataDir/nba/null.csv"),
+        allowMissingColumns = true)))
+    val nbaIntVid = MapCatalog(
+      tags = nba.tags.map { case (t, df) => t -> hashVids(df) },
+      edges = nba.edges.map { case (e, df) => e -> hashVids(df) })
+    val student = space("student", Seq("person", "teacher", "student"),
+      Seq("is_teacher", "is_schoolmate", "is_friend", "is_colleagues"))
+    val (ngTags, ngEdges) = loadDir(spark, s"$dataDir/ngdata")
+    Map("nba" -> nba, "nba_int_vid" -> nbaIntVid, "student" -> student,
+      "ngdata" -> MapCatalog(ngTags, ngEdges))
+  }
+
+  private val spaceRe = "Given a graph with space named \"([^\"]+)\"".r
+
+  /** A feature file's default space — the one its Background names
+    * (`Given a graph with space named X`; nba when none) — and the
+    * fixtures it runs against. A Scenario-Outline `<space_name>`
+    * binds each Examples row's space at run time; only the
+    * pre-expansion parse sees the placeholder, which maps to nba. */
+  def tckSpace(catalogs: Map[String, GraphCatalog], featureText: String)
+      : (Map[String, GraphCatalog], String) = {
+    val space = spaceRe.findFirstMatchIn(featureText).map(_.group(1)).getOrElse("nba")
+    (if (space.startsWith("<")) catalogs + (space -> catalogs("nba")) else catalogs,
+      space)
+  }
 }

@@ -9,6 +9,8 @@ package graft.tck
 object TckCorpus {
   private val root = "/root/reference/tests/tck/features"
   private val oc = "/root/reference/tests/tck/openCypher/features"
+  /** The fixture CSVs the features load (CsvFixtures.tckCatalogs). */
+  val dataDir: String = root.stripSuffix("/tck/features") + "/data"
   val features = Seq(
     s"$root/go/GO.feature",
     s"$root/fetch/FetchVertices.strVid.feature",

@@ -428,12 +428,9 @@ object TckRunner {
     out.result()
   }
 
-  /** Legacy view: the read-only golden cases a fixture catalog can
-    * answer without any scenario-local state (used by corpus-size
-    * sanity tests). */
-  def parseFeature(text: String): Seq[Case] =
-    parseFeature(text, space = "nba")
-
+  /** Legacy view: the read-only golden cases the `space` fixture can
+    * answer without any scenario-local state (corpus-size sanity
+    * tests, TckTriage's got/want dump). */
   def parseFeature(text: String, space: String): Seq[Case] =
     parseScenarios(text, space).flatMap { sc =>
       if (sc.skip || sc.ownSpace || !sc.fixtureSpace.contains(space)) Nil
@@ -928,16 +925,8 @@ object TckRunner {
     solve(want.toList, got.toVector)
   }
 
-  /** Execute every parsable case against the catalog; unordered
-    * multiset compare. */
   /** Rows above this are a runaway query, not a golden table. */
   private val MaxGoldenRows = 100000
-
-  def run(g: GraphCatalog, featureText: String): Report =
-    run(g, featureText, space = "nba")
-
-  def run(g: GraphCatalog, featureText: String, space: String): Report =
-    runAll(Map(space -> g), space, featureText)
 
   /** Multi-fixture entry: scenarios bind to whichever fixture space
     * they name (`Given a graph with space named X` / `Given load "X"

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Harness, SparkEntry}
 
 /** Plan auditor: `.explain("formatted")` for selected queries (or a
   * default audit set) — the loop for checking that filters reach the
@@ -13,26 +12,12 @@ object Explain {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q_lookup", "q_filter", "q_inner_join", "q_aggregate",
         "q_go_1", "q_cosine_topk", "q_dedup_exact")
-    // session shape mirrors Bench: same master/core count, same
-    // Tune-derived shuffle partitions, same AQE posture — plans
-    // captured here must be the plans the bench actually runs (at
-    // local[4]/4-partitions the hop joins broadcast where the bench's
-    // local[32]/sf0.1 plans sort-merge, hiding exactly the plan
-    // features under audit)
-    // tolerate a malformed SPARK_GRAFT_CPUS (audit tool: default beats
-    // a NumberFormatException before any plan prints)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        graft.Tune.shufflePartitions(sfDir, cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the session Bench builds (same core count, Tune-derived shuffle
+    // partitions and AQE posture): plans captured here must be the
+    // plans the bench actually runs (at local[4]/4-partitions the hop
+    // joins broadcast where local[32]/sf0.1 plans sort-merge, hiding
+    // exactly the plan features under audit)
+    val spark = Harness.tuned(sfDir, "ERROR")
     // plans must reflect the bench/verify posture: store-backed unless
     // SPARK_GRAFT_STORE=off (same knob as Bench/Verify)
     if (!sys.env.get("SPARK_GRAFT_STORE").contains("off"))

@@ -49,20 +49,12 @@ object LocalClusterCheck {
       .createTempDirectory("graft-reliable-ckpt").toString
 
     // ---- pass 1: multi-executor, reliable checkpoints ----
-    val cluster = SparkSession.builder()
-      .master("local-cluster[2,2,2048]")
-      .appName("graft-local-cluster-check")
-      // worker-forked executor JVMs need the sbt classes on their
-      // classpath (the standalone worker only ships SPARK_HOME jars)
-      .config("spark.executor.extraClassPath",
-        System.getProperty("java.class.path"))
-      .config("spark.graft.checkpointDir", ckptDir)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    cluster.sparkContext.setLogLevel("WARN")
+    val cluster = graft.Harness.session("local-cluster[2,2,2048]", 8, "WARN",
+      Some("graft-local-cluster-check"), Seq(
+        // worker-forked executor JVMs need the sbt classes on their
+        // classpath (the standalone worker only ships SPARK_HOME jars)
+        "spark.executor.extraClassPath" -> System.getProperty("java.class.path"),
+        "spark.graft.checkpointDir" -> ckptDir))
     require(graft.Ckpt.reliable(cluster), "reliable mode not active")
 
     // free-after-checkpoint contract: a freed RELIABLE checkpoint is
@@ -95,15 +87,8 @@ object LocalClusterCheck {
     SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
 
     // ---- pass 2: plain local mode, default localCheckpoint path ----
-    val local = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-local-baseline")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    local.sparkContext.setLogLevel("WARN")
+    val local = graft.Harness.session("local[4]", 8, "WARN",
+      Some("graft-local-baseline"))
     require(!graft.Ckpt.reliable(local), "local baseline unexpectedly reliable")
     IterativeQueries.foreach { name =>
       if (clusterCounts.contains(name)) {

@@ -1,90 +1,65 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.graph.{GraphCatalog, MapCatalog}
+import graft.Harness
+import graft.nql.Gql
 import graft.sources.CsvFixtures
-import graft.tck.TckRunner
+import graft.tck.{TckCorpus, TckRunner}
 
 /** Triage: run the TckRunner over feature files or whole directories
-  * WITHOUT asserting, printing a per-file report line plus failures and
-  * errors. Mirrors TckRunnerSpec's catalog setup (nba / nba_int_vid /
-  * student). Usage:
+  * WITHOUT asserting, printing a per-file report line plus failures,
+  * errors and the runner's skipped steps with their reasons. Uses the
+  * fixture spaces TckRunnerSpec runs against (CsvFixtures.tckCatalogs).
+  * Usage:
   *   runMain graft.tools.TckTriage <file-or-dir>...
-  * Env: SPARK_GRAFT_TCK_DEBUG=1 for [tck-skip]/[tck-dead] reasons.
+  * Env: SPARK_GRAFT_TCK_DEBUG=1 for [tck-skip]/[tck-dead] reasons;
+  * TCK_QUERY=<substring> dumps got/want rows for the matching queries
+  * of the FIRST file instead of a report.
   */
 object TckTriage {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[16]").appName("tck-triage")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val nba = "/root/reference/tests/data/nba"
-    val stu = "/root/reference/tests/data/student"
-    def strCatalog = MapCatalog(
-      tags = Map(
-        "player" -> CsvFixtures.load(spark, s"$nba/player.csv")
-          .unionByName(CsvFixtures.load(spark, s"$nba/null.csv"),
-            allowMissingColumns = true),
-        "team" -> CsvFixtures.load(spark, s"$nba/team.csv"),
-        "bachelor" -> CsvFixtures.load(spark, s"$nba/bachelor.csv")),
-      edges = Map(
-        "like" -> CsvFixtures.load(spark, s"$nba/like.csv"),
-        "serve" -> CsvFixtures.load(spark, s"$nba/serve.csv"),
-        "teammate" -> CsvFixtures.load(spark, s"$nba/teammate.csv")))
-    def intCatalog = {
-      val s = strCatalog
-      MapCatalog(
-        tags = s.tags.map { case (t, df) => t -> CsvFixtures.hashVids(df) },
-        edges = s.edges.map { case (e, df) => e -> CsvFixtures.hashVids(df) })
-    }
-    def studentCatalog = MapCatalog(
-      tags = Map(
-        "person" -> CsvFixtures.load(spark, s"$stu/person.csv"),
-        "teacher" -> CsvFixtures.load(spark, s"$stu/teacher.csv"),
-        "student" -> CsvFixtures.load(spark, s"$stu/student.csv")),
-      edges = Map(
-        "is_teacher" -> CsvFixtures.load(spark, s"$stu/is_teacher.csv"),
-        "is_schoolmate" -> CsvFixtures.load(spark, s"$stu/is_schoolmate.csv"),
-        "is_friend" -> CsvFixtures.load(spark, s"$stu/is_friend.csv"),
-        "is_colleagues" -> CsvFixtures.load(spark, s"$stu/is_colleagues.csv")))
-
-    def ngdataCatalog = {
-      val (t, e) = CsvFixtures.loadDir(spark,
-        "/root/reference/tests/data/ngdata")
-      MapCatalog(tags = t, edges = e)
-    }
-    val catalogs = Map[String, GraphCatalog](
-      "nba" -> strCatalog, "nba_int_vid" -> intCatalog,
-      "student" -> studentCatalog, "ngdata" -> ngdataCatalog)
-
-    val spaceRe = "Given a graph with space named \"([^\"]+)\"".r
+    val spark = Harness.session("local[16]", 16, "ERROR", Some("tck-triage"))
+    val catalogs = CsvFixtures.tckCatalogs(spark, TckCorpus.dataDir)
     val files = args.toSeq.flatMap { a =>
       val f = new java.io.File(a)
       if (f.isDirectory)
         f.listFiles().filter(_.getName.endsWith(".feature")).map(_.getPath).sorted
       else Seq(a)
     }
+    def read(f: String) = java.nio.file.Files.readString(java.nio.file.Paths.get(f))
+
+    sys.env.get("TCK_QUERY").foreach { sub =>
+      val text = read(files.head)
+      val (fixtures, space) = CsvFixtures.tckSpace(catalogs, text)
+      TckRunner.parseFeature(text, space).filter(_.query.contains(sub)).foreach { c =>
+        println(s"QUERY ${c.query}")
+        val got = Gql.runScript(fixtures(space), c.query).limit(100000).collect().toSeq
+          .map(r => r.toSeq.map(TckRunner.norm).mkString(" | "))
+        got.sorted.foreach(r => println(s"GOT  $r"))
+        c.golden.map(_.map(TckRunner.normGoldenCell(_)).mkString(" | "))
+          .sorted.foreach(r => println(s"WANT $r"))
+      }
+      spark.stop(); sys.exit(0)
+    }
+
     var te = 0; var tp = 0; var ts = 0; var terr = 0; var tf = 0
     files.foreach { f =>
-      val text = java.nio.file.Files.readString(java.nio.file.Paths.get(f))
-      val space = spaceRe.findFirstMatchIn(text).map(_.group(1)).getOrElse("nba")
-      val fixtures =
-        if (space.startsWith("<")) catalogs + (space -> strCatalog)
-        else catalogs
+      val text = read(f)
+      val (fixtures, space) = CsvFixtures.tckSpace(catalogs, text)
+      val short = f.split('/').takeRight(2).mkString("/")
       val report = try TckRunner.runAll(fixtures, space, text) catch {
         case e: Exception =>
-          println(s"${f.split('/').takeRight(2).mkString("/")}: RUNNER-CRASH ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
+          println(s"$short: RUNNER-CRASH ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
           TckRunner.Report(0, 0, 0, Nil)
       }
-      println(f"${f.split('/').takeRight(2).mkString("/")}%-44s exec=${report.executed}%-4d pass=${report.passed}%-4d skip=${report.skipped}%-4d err=${report.errored} fail=${report.failures.size}")
+      println(f"$short%-44s exec=${report.executed}%-4d pass=${report.passed}%-4d skip=${report.skipped}%-4d err=${report.errored} fail=${report.failures.size}")
       report.failures.take(3).foreach { case (q, why) =>
         println(s"  FAIL ${q.take(150)}\n    -> ${why.take(300)}")
       }
       report.errors.take(3).foreach { case (q, why) =>
         println(s"  ERROR ${q.take(150)}\n    -> ${why.take(250)}")
+      }
+      report.skips.foreach { case (q, why) =>
+        println(s"  SKIP [${why.take(150)}] :: ${q.replaceAll("\\s+", " ").take(200)}")
       }
       te += report.executed; tp += report.passed; ts += report.skipped
       terr += report.errored; tf += report.failures.size

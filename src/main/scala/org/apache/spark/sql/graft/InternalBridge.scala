@@ -89,8 +89,11 @@ object InternalBridge {
             // joins/aggregations can reuse, and its row→partition map
             // is a pure function of the row (range bounds or single-
             // partition layouts gain nothing here)
+            // the layout must describe the checkpointed RDD itself:
+            // same partition count, keyed on its own attributes
             case h: HashPartitioning
                 if h.numPartitions >= minWidth &&
+                  h.numPartitions == l.rdd.getNumPartitions &&
                   h.references.subsetOf(out) =>
               part = h
               val o = ep.outputOrdering

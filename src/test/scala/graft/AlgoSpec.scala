@@ -51,6 +51,43 @@ class AlgoSpec extends SparkSpec {
     assert(out.as[(String, String)].collect().forall(_._2 == "v1"))
   }
 
+  test("Ckpt.mat adopts the executed hash layout when forced on, same rows as off") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.LogicalRDD
+    // a private session: the dials below must not reach parallel suites.
+    // No broadcast joins, so each round's state leaves a sort-merge
+    // join hash-partitioned on vid
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "4")
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s.conf.set(Ckpt.AdoptMinWidthKey, "2")
+    import s.implicits._
+    val verts = ((1 to 9).map(i => s"v$i") ++ Seq("x1", "x2")).toDF("vid")
+    val edges = ((1 to 8).map(i => (s"v$i", s"v${i + 1}")) ++ Seq("x1" -> "x2"))
+      .toDF("src", "dst")
+    def hashed(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collect {
+        case l: LogicalRDD => l.outputPartitioning.isInstanceOf[HashPartitioning]
+      }
+    def run() = {
+      val state = Ckpt.mat(edges.groupBy("src").count())
+      val wcc = GraphAlgos.connectedComponents(verts, edges, 50, untilConverged = true)
+      val pr = GraphAlgos.pageRank(verts, edges, 3)
+      (hashed(state), hashed(wcc), hashed(pr), wcc.as[(String, String)].collect().toSet,
+        pr.as[(String, Double)].collect().toMap)
+    }
+    val (stateOn, wccOn, prOn, wccRowsOn, prRowsOn) = run()
+    assert(stateOn == Seq(true) && wccOn.contains(true) && prOn.contains(true),
+      s"layout not adopted: state $stateOn, wcc $wccOn, pagerank $prOn")
+    s.conf.set(Ckpt.AdoptKey, "off")
+    val (stateOff, wccOff, prOff, wccRowsOff, prRowsOff) = run()
+    assert(!(stateOff ++ wccOff ++ prOff).contains(true))
+    assert(wccRowsOn == wccRowsOff && wccRowsOn.size == 11)
+    assert(prRowsOn.keySet == prRowsOff.keySet)
+    prRowsOn.foreach { case (v, r) => assert(math.abs(r - prRowsOff(v)) < 1e-12, v) }
+  }
+
   test("PageRank tol-mode stops early and matches long fixed run") {
     import spark.implicits._
     val verts = (1 to 6).map(i => s"v$i").toDF("vid")

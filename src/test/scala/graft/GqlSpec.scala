@@ -154,4 +154,64 @@ class GqlSpec extends SparkSpec {
       .select("hops").as[Int].collect().toSeq
     assert(all == Seq(1), s"untyped path should use the road: $all")
   }
+
+  test("MATCH WHERE pattern conjuncts plan as semi/anti joins, same rows as the rollup") {
+    import spark.implicits._
+    // e: b->a, c->a, d->b and z->a from z, which is no vertex;
+    // x: a=1 .. e=5
+    val cat = graft.graph.MapCatalog(
+      tags = Map("t" -> Seq(("a", 1L), ("b", 2L), ("c", 3L), ("d", 4L), ("e", 5L))
+        .toDF("vid", "x")),
+      edges = Map("e" -> Seq(("b", "a", 0L), ("c", "a", 0L), ("d", "b", 0L),
+        ("z", "a", 0L)).toDF("src", "dst", "rank")))
+    def run(q: String) = Gql.run(cat, q)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq).toSet
+    // how the WHERE was planned: a semi or anti join with no per-row
+    // path lists, or the rollup's collect_list
+    def planned(df: org.apache.spark.sql.DataFrame): String = {
+      val plan = df.queryExecution.optimizedPlan.toString
+      if (plan.contains("collect_list")) "rollup"
+      else if (plan.contains("LeftAnti")) "anti"
+      else if (plan.contains("LeftSemi")) "semi"
+      else "neither"
+    }
+    def vids(where: String) =
+      run(s"MATCH (v:t) WHERE $where RETURN id(v) AS v")
+    val cases = Seq(
+      ("(v)<-[:e]-()", Set("a", "b"), "semi"),
+      ("NOT (v)<-[:e]-()", Set("c", "d", "e"), "anti"),
+      ("(v)<-[:e]-() AND v.t.x > 1", Set("b"), "semi"),
+      ("v.t.x < 5 AND NOT (v)<-[:e]-()", Set("c", "d"), "anti"),
+      // two hops expand a path frame seeded from the binding
+      ("(v)<-[:e]-()<-[:e]-()", Set("a"), "semi"),
+      ("NOT (v)<-[:e]-()<-[:e]-()", Set("b", "c", "d", "e"), "anti"),
+      // inside OR the pattern stays on the rollup path
+      ("(v)<-[:e]-() OR v.t.x == 5", Set("a", "b", "e"), "rollup"))
+    cases.foreach { case (w, want, how) =>
+      val df = vids(w)
+      assert(df.as[String].collect().toSet == want, w)
+      assert(planned(df) == how, s"$w:\n${df.queryExecution.optimizedPlan}")
+      // `OR false` keeps the same predicate on the rollup path
+      val rollup = vids(s"($w) OR false")
+      assert(planned(rollup) == "rollup")
+      assert(rows(df) == rows(rollup), s"$w vs its rollup")
+    }
+    // OPTIONAL MATCH leaves w NULL for c, d and e, and binds a's
+    // in-neighbor z, which is no vertex. Neither matches a pattern —
+    // the rollup's all-vertex head drops z — so NOT keeps both and the
+    // bare pattern drops both
+    def optional(w: String) = run(
+      s"""MATCH (v:t) OPTIONAL MATCH (v)<-[:e]-(w)
+         |MATCH (v) WHERE $w RETURN id(v) AS v, id(w) AS w""".stripMargin)
+    val anti = optional("NOT (w)-[:e]->()")
+    assert(rows(anti) == Set(Seq("a", "z"), Seq("c", null), Seq("d", null),
+      Seq("e", null)))
+    assert(planned(anti) == "anti")
+    assert(rows(anti) == rows(optional("(NOT (w)-[:e]->()) OR false")))
+    val semi = optional("(w)-[:e]->()")
+    assert(rows(semi) == Set(Seq("a", "b"), Seq("a", "c"), Seq("b", "d")))
+    assert(planned(semi) == "semi")
+    assert(rows(semi) == rows(optional("((w)-[:e]->()) OR false")))
+  }
 }

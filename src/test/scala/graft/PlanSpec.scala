@@ -193,6 +193,13 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("MATCH WHERE NOT pattern is an anti join, not a per-row path rollup") {
+    assume(have)
+    val plan = executed("q_match_pattern_pred").toString
+    assert(plan.contains("LeftAnti"), s"no anti join:\n${plan.take(3000)}")
+    assert(!plan.contains("collect_list"), s"rollup aggregate left:\n${plan.take(3000)}")
+  }
+
   test("variable id() seed prunes the second MATCH with a semi join") {
     assume(have)
     val df = SparkEntry.queries("q_ldbc_varseed")(spark, dir)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.sources.CsvFixtures
-import graft.operators.{Control, Mutations}
+import graft.operators.Mutations
 import java.nio.file.Files
 
 class SourcesSinksSpec extends SparkSpec {
@@ -57,6 +57,71 @@ class SourcesSinksSpec extends SparkSpec {
     assert(df.count() > 100)
   }
 
+  test("CsvFixtures: TCK fixture spaces from a tests/data tree") {
+    val data = Files.createTempDirectory("graft-tck-data")
+    def put(rel: String, lines: String*): Unit = {
+      val f = data.resolve(rel)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, lines.mkString("", "\n", "\n"))
+    }
+    put("nba/player.csv", ":VID(string),player.name:string,player.age:int",
+      "Tim Duncan,Tim Duncan,42", "Tony Parker,Tony Parker,36")
+    put("nba/null.csv", ":VID(string),player.name:string", "Null1,")
+    put("nba/team.csv", ":VID(string),team.name:string", "Spurs,Spurs")
+    put("nba/bachelor.csv", ":VID(string),bachelor.name:string",
+      "Tim Duncan,Tim Duncan")
+    put("nba/like.csv", ":SRC_VID(string),:DST_VID(string),like.likeness:int",
+      "Tim Duncan,Tony Parker,95")
+    put("nba/serve.csv",
+      ":SRC_VID(string),:DST_VID(string),:RANK,serve.start_year:int",
+      "Tim Duncan,Spurs,0,1997")
+    put("nba/teammate.csv", ":SRC_VID(string),:DST_VID(string),teammate.start_year:int",
+      "Tim Duncan,Tony Parker,2001")
+    Seq("person", "teacher", "student").foreach(t =>
+      put(s"student/$t.csv", s":VID(string),$t.name:string", s"${t}1,n"))
+    Seq("is_teacher", "is_schoolmate", "is_friend", "is_colleagues").foreach(e =>
+      put(s"student/$e.csv", ":SRC_VID(string),:DST_VID(string)", "person1,teacher1"))
+    put("ngdata/geo.csv", ":VID(string),geo.name:string", "g1,x")
+
+    val cats = CsvFixtures.tckCatalogs(spark, data.toString)
+    assert(cats.keySet == Set("nba", "nba_int_vid", "student", "ngdata"))
+    val nba = cats("nba")
+    assert(nba.tags.keySet == Set("player", "team", "bachelor"))
+    assert(nba.edges.keySet == Set("like", "serve", "teammate"))
+    assert(cats("student").tags.keySet == Set("person", "teacher", "student"))
+    assert(cats("student").edges.keySet ==
+      Set("is_teacher", "is_schoolmate", "is_friend", "is_colleagues"))
+    assert(cats("ngdata").tags.keySet == Set("geo") && cats("ngdata").edges.isEmpty)
+    // null.csv joins player; its missing age column is NULL
+    val players = nba.tags("player").select("vid", "name", "age")
+      .as[(String, Option[String], Option[Long])].collect().toSet
+    assert(players == Set(("Tim Duncan", Some("Tim Duncan"), Some(42L)),
+      ("Tony Parker", Some("Tony Parker"), Some(36L)), ("Null1", None, None)))
+    // nba_int_vid: the same rows keyed by the hashed vids
+    val intVid = cats("nba_int_vid")
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.filter(Set("vid", "src", "dst")).map(col): _*)
+        .collect().map(_.toSeq).toSet
+    nba.tags.foreach { case (t, df) =>
+      assert(keys(intVid.tags(t)) == keys(CsvFixtures.hashVids(df)), t)
+    }
+    nba.edges.foreach { case (e, df) =>
+      assert(keys(intVid.edges(e)) == keys(CsvFixtures.hashVids(df)), e)
+    }
+    assert(intVid.tags("player").schema("vid").dataType ==
+      org.apache.spark.sql.types.LongType)
+
+    // a feature's Background picks its space; a <space_name> outline
+    // parses against nba; no Background means nba
+    val (f1, s1) = CsvFixtures.tckSpace(cats,
+      "Background:\n  Given a graph with space named \"student\"\n")
+    assert(s1 == "student" && f1 == cats)
+    val (f2, s2) = CsvFixtures.tckSpace(cats,
+      "Given a graph with space named \"<space_name>\"")
+    assert(s2 == "<space_name>" && f2(s2) == nba)
+    assert(CsvFixtures.tckSpace(cats, "Feature: x")._2 == "nba")
+  }
+
   test("Mutations: insert overwrites on key, insertIfNotExists keeps") {
     val t = Mutations.vertexTable(spark, tmpDir() + "/tag")
     t.insert(Seq(("a", 1), ("b", 2)).toDF("vid", "x"))
@@ -98,17 +163,6 @@ class SourcesSinksSpec extends SparkSpec {
     t.delete(Seq(("a", "b", 0L)).toDF("src", "dst", "rank"))
     val left = t.read.as[(String, String, Long, Int)].collect()
     assert(left.length == 1 && left.head._3 == 1L) // rank-1 edge survives
-  }
-
-  test("Control: loop / select / unionAllVersions") {
-    val out = Control.loop(Seq(1).toDF("x") :: Nil, 5)(_.head.count() < 4) { dfs =>
-      dfs.head.withColumn("x", col("x") + 1).unionByName(dfs.head) :: dfs
-    }
-    assert(out.head.count() >= 4)
-    val sel = Control.select(cond = false)(Seq(1).toDF("x"))(Seq(2).toDF("x"))
-    assert(sel.as[Int].head() == 2)
-    val u = Control.unionAllVersions(Seq(Seq(1).toDF("x"), Seq(2).toDF("x")))
-    assert(u.as[Int].collect().sorted.sameElements(Array(1, 2)))
   }
 
   test("Udfs: scalar + aggregate registration in the SQL catalog") {
